@@ -79,9 +79,9 @@ EXTENDED = [
 ]
 
 
-# Registered in round 5 (the 13 late-r4 operators); timed as their own
-# group so HEADLINE and EXTENDED stay comparable across rounds.
-ROUND5 = [
+# The later registrations, timed in per-domain groups keyed by the name
+# prefix (dd, crp, sim, ...) so HEADLINE and EXTENDED stay comparable.
+DOMAIN_GROUPED = [
     "dd_containment_sweep",     # shares the cached containment base
     "crp_fuzzy_contamination",  # near-dup eval-overlap evidence rows
     "rel_topn_other_rollup",    # top-N + OTHER report
@@ -95,11 +95,6 @@ ROUND5 = [
     "crp_filter_funnel",        # stage-attrition census
     "crp_dsir_select",          # DSIR importance resampling
     "sim_semantic_dedup",       # SemDeDup bucket election
-]
-
-# round-6 registrations (the four implemented in r5 plus the fifteen
-# that landed and registered in round 6 itself)
-ROUND6 = [
     "txt_bm25_search",      # integer-exact BM25 lexical search
     "txt_bpe_pair_census",  # BPE merge-candidate pair census
     "sim_hybrid_search",    # BM25+cosine RRF hybrid retrieval
@@ -119,10 +114,6 @@ ROUND6 = [
     "txt_dup_passage_census",   # chunked exact-substr dup census
     "rel_fuzzy_match_block",    # blocked Levenshtein entity match
     "sim_power_iteration",      # one PCA power-iteration step
-]
-
-# round-7 registrations
-ROUND7 = [
     "sim_pagerank_fixed3",       # 3-round PageRank unroll
     "sim_kmeans_fixed",          # 3-round Lloyd chain
     "sim_semdedup_sweep",        # SemDeDup threshold sweep
@@ -131,10 +122,6 @@ ROUND7 = [
     "scl_range_partition_plan",  # range-boundary planner + balance
     "evt_out_of_order_census",   # lateness bands for watermark choice
     "sim_knn_join_arrow",        # bit-identical Arrow/BLAS knn election
-]
-
-# round-8 registrations
-ROUND8 = [
     "txt_winnow_pairs",          # winnowing cross-doc overlap pairs
 ]
 
@@ -1083,6 +1070,17 @@ def cold_build_block(spark, sf_dir: str) -> dict:
     return out
 
 
+def best_of(passes: list[dict], selectors: dict[str, list[str]]) -> dict:
+    """Per-metric best-of across passes: each selector's keys come from
+    the pass where that selector is smallest, because one pass can be
+    clean for one sub-block and contended for another."""
+    out = {}
+    for selector, keys in selectors.items():
+        best = min(passes, key=lambda r: r[selector])
+        out.update({k: best[k] for k in keys})
+    return out
+
+
 def event_stream_latency(spark, sf_dir: str) -> dict:
     """Micro-batch latency point for the event-time family (VERDICT r9
     #8 — the one family whose e2es all run availableNow with no latency
@@ -1092,7 +1090,7 @@ def event_stream_latency(spark, sf_dir: str) -> dict:
     is one micro-batch, and report the engine's own per-batch
     triggerExecution durations (p50/p95, first batch separately — it
     pays stream initialization). No registry query changes; the sink is
-    noop."""
+    noop. ``valid`` is false when the drain did not finish in time."""
     import shutil
     import tempfile
     from time import perf_counter
@@ -1118,12 +1116,19 @@ def event_stream_latency(spark, sf_dir: str) -> dict:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
-        out["wall_seconds"] = round(perf_counter() - t0, 3)
-        progresses = [
-            p if isinstance(p, dict) else json.loads(p.json)
-            for p in (q.recentProgress or [])
-        ]
+        try:
+            # a timed-out query is still running: stop it, and publish
+            # no progress read from a live query
+            out["valid"] = bool(q.awaitTermination(600))
+            out["wall_seconds"] = round(perf_counter() - t0, 3)
+            if not out["valid"]:
+                return out
+            progresses = [
+                p if isinstance(p, dict) else json.loads(p.json)
+                for p in (q.recentProgress or [])
+            ]
+        finally:
+            q.stop()
         durs = [
             p["durationMs"]["triggerExecution"]
             for p in progresses
@@ -1309,7 +1314,7 @@ def main() -> None:
     # comes in multi-second windows — consecutive repeats of one query
     # would all land inside one window, so each pass runs the whole list
     # before repeating, spreading every query's samples minutes apart
-    all_names = HEADLINE + EXTENDED + ROUND5 + ROUND6 + ROUND7 + ROUND8
+    all_names = HEADLINE + EXTENDED + DOMAIN_GROUPED
     dfs = {name: qs[name](spark, sf_dir) for name in all_names}
     timings: dict[str, float] = {name: float("inf") for name in all_names}
     # probe-gated retry (VERDICT r5 #4): r5's official recording opened
@@ -1332,12 +1337,11 @@ def main() -> None:
             break
     timings = {name: round(t, 3) for name, t in timings.items()}
     group_timings = {
-        "extended": {name: timings.pop(name) for name in EXTENDED},
-        "round5": {name: timings.pop(name) for name in ROUND5},
-        "round6": {name: timings.pop(name) for name in ROUND6},
-        "round7": {name: timings.pop(name) for name in ROUND7},
-        "round8": {name: timings.pop(name) for name in ROUND8},
+        "extended": {name: timings.pop(name) for name in EXTENDED}
     }
+    for name in DOMAIN_GROUPED:
+        group = name.split("_", 1)[0]
+        group_timings.setdefault(group, {})[name] = timings.pop(name)
 
     # Eager-construction queries (measurement-bug fix, OPTIMIZATION_r09):
     # these fns EXECUTE jobs while the DataFrame is being BUILT (the
@@ -1397,24 +1401,19 @@ def main() -> None:
     # per-metric best-of for the round-6 block (same rationale as knn:
     # one pass can be clean for one sub-block and contended for another)
     r6_stress = {
-        **{
-            k: min(r6_passes, key=lambda r: r["passage_seconds"])[k]
-            for k in (
+        **best_of(r6_passes, {
+            "passage_seconds": [
                 "passage_input_docs", "passage_sources", "passage_seconds",
                 "passage_docs_per_second",
-            )
-        },
-        **{
-            k: min(r6_passes, key=lambda r: r["fuzzy_seconds"])[k]
-            for k in ("fuzzy_input_rows", "fuzzy_pairs", "fuzzy_seconds")
-        },
-        **{
-            k: min(r6_passes, key=lambda r: r["power_seconds_3_iters"])[k]
-            for k in (
+            ],
+            "fuzzy_seconds": [
+                "fuzzy_input_rows", "fuzzy_pairs", "fuzzy_seconds",
+            ],
+            "power_seconds_3_iters": [
                 "power_input_vecs", "power_seconds_3_iters",
                 "power_last_cosine",
-            )
-        },
+            ],
+        }),
         "probe_ms": [
             [p["passage_probe_ms"], p["fuzzy_probe_ms"], p["power_probe_ms"]]
             for p in r6_passes
@@ -1425,7 +1424,7 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     detail = {
         # per-query timings for every non-headline group; stdout carries
-        # only the folded groups_total (VERDICT r6 #7 — the per-round
+        # only the folded groups_total (VERDICT r6 #7 — the per-group
         # totals were growing the driver line toward its 1900-char cap)
         "group_queries": group_timings,
         "group_totals": {
@@ -1453,27 +1452,20 @@ def main() -> None:
         # and contended for the fixed run; selecting the whole dict by a
         # single key would publish the other metric's contaminated value
         "sim_knn_join_10x": {
-            **{
-                k: min(knn_passes, key=lambda r: r["fixed_seconds"])[k]
-                for k in (
+            **best_of(knn_passes, {
+                "fixed_seconds": [
                     "input_vecs", "fixed_bits", "fixed_seconds",
                     "fixed_matched_vecs", "fixed_vecs_per_second",
-                )
-            },
-            **{
-                k: min(knn_passes, key=lambda r: r["scaled_seconds"])[k]
-                for k in (
+                ],
+                "scaled_seconds": [
                     "scaled_bits", "scaled_seconds",
                     "scaled_matched_vecs", "scaled_vecs_per_second",
-                )
-            },
-            **{
-                k: min(knn_passes, key=lambda r: r["arrow_seconds"])[k]
-                for k in (
+                ],
+                "arrow_seconds": [
                     "arrow_bits", "arrow_seconds",
                     "arrow_matched_vecs", "arrow_vecs_per_second",
-                )
-            },
+                ],
+            }),
             "probe_ms": [p["probe_ms"] for p in knn_passes],
             "probe_wide_ms": [p["probe_wide_ms"] for p in knn_passes],
         },
@@ -1481,25 +1473,15 @@ def main() -> None:
         # one pass can be clean for the search and contended for the
         # index build
         "retrieval_10x": {
-            **{
-                k: min(rt_passes, key=lambda r: r["bm25_seconds"])[k]
-                for k in (
+            **best_of(rt_passes, {
+                "bm25_seconds": [
                     "input_docs", "bm25_rows", "bm25_seconds",
                     "bm25_docs_per_second",
-                )
-            },
-            **{
-                k: min(rt_passes, key=lambda r: r["index_build_seconds"])[k]
-                for k in ("index_postings", "index_build_seconds")
-            },
-            **{
-                k: min(rt_passes, key=lambda r: r["apply_seconds"])[k]
-                for k in ("apply_postings", "apply_seconds")
-            },
-            **{
-                k: min(rt_passes, key=lambda r: r["query_seconds"])[k]
-                for k in ("query_rows", "query_seconds")
-            },
+                ],
+                "index_build_seconds": ["index_postings", "index_build_seconds"],
+                "apply_seconds": ["apply_postings", "apply_seconds"],
+                "query_seconds": ["query_rows", "query_seconds"],
+            }),
             "probe_ms": [p["probe_ms"] for p in rt_passes],
             "probe_wide_ms": [p["probe_wide_ms"] for p in rt_passes],
         },
@@ -1530,8 +1512,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # ONE folded total for all non-headline groups (extended + each
-        # round's registrations); the per-group breakdown lives in
+        # ONE folded total for all non-headline groups (extended + the
+        # domain groups); the per-group breakdown lives in
         # BENCH_DETAIL group_totals/group_queries (VERDICT r6 #7)
         "groups_total": round(
             sum(sum(t.values()) for t in group_timings.values()), 3

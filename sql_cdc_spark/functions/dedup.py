@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions.text import fingerprint, normalize_text, tokens
+from sql_cdc_spark.streaming.feed import ckpt
 
 # MinHash parameters — shared constants for the Spark and DuckDB sides.
 MINHASH_MOD = 1_000_003          # prime; keeps a*h+b within int64
@@ -104,29 +105,6 @@ def balance_partitions(df: DataFrame) -> DataFrame:
     return df
 
 
-def doc_shingles_exact(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, sh64) exploded-distinct, pure JVM expressions — the
-    cross-implementation REFERENCE for doc_shingles (the elected Arrow
-    kernel below must stay bit-identical to this; tests/test_llm_ops.py
-    pins it on the driver corpus plus planted Unicode/blank edges). The
-    shingle string is hashed to its 60-bit md5-prefix int RIGHT HERE,
-    before the distinct: every downstream stage then moves and compares
-    8-byte ints instead of shingle strings, and the expensive
-    md5+base16 parse runs exactly once per shingle occurrence (the
-    round-3 bench regression was exactly that recomputation). The
-    DuckDB oracle dedups on the same hashed domain, so parity is exact
-    by construction — 60-bit collisions included."""
-    sh64 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
-    return (
-        balance_partitions(docs)
-        .select(F.col(id_col), F.explode(shingles(F.col(text_col))).alias("shingle"))
-        .select(F.col(id_col), sh64.alias("sh64"))
-        .distinct()
-    )
-
-
 def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, sh64) distinct-per-doc — the shared input of MinHash,
     Jaccard and containment, as an ELECTED Arrow kernel (r9
@@ -137,8 +115,9 @@ def doc_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     row, so the output is already (id, sh64)-distinct and the JVM
     path's full distinct EXCHANGE of the shingle table disappears.
     Same-window A/B on the bench 10× corpus: scan 3.55 → 0.92 s (3.8×),
-    scan+minhash 3.48 → 1.08 s; bit-identical to doc_shingles_exact at
-    sf0.01 (26,136 rows), sf0.1 (260,388 rows) and on planted
+    scan+minhash 3.48 → 1.08 s; bit-identical to the JVM-expression
+    reference (tests/test_llm_ops.py::doc_shingles_exact) at sf0.01
+    (26,136 rows), sf0.1 (260,388 rows) and on planted
     Unicode/whitespace/blank edge cases (Java regex \\s is ASCII-only —
     mirrored by re.ASCII; Spark trim strips 0x20 only — mirrored by
     strip(' '); str.lower() matched UTF8String.toLowerCase on every
@@ -753,10 +732,10 @@ def release_local_checkpoint(df: DataFrame) -> None:
 class NearDupState(NamedTuple):
     """Materialized incremental near-dup state — the local analog of the
     parquet state tables a 100 TB corpus pipeline maintains between daily
-    CDC batches. All five frames are lineage-cut (localCheckpoint) when
-    built with ``checkpoint=True``, so repeated ``apply_near_dup_changes``
-    rounds never replan the whole history (at cluster scale these are
-    state tables written to storage between batches)."""
+    CDC batches. All five frames are lineage-cut (localCheckpoint), so
+    repeated ``apply_near_dup_changes`` rounds never replan the whole
+    history (at cluster scale these are state tables written to storage
+    between batches)."""
 
     shingles: DataFrame      # (doc_id, sh64) distinct hashed shingles
     sigs: DataFrame          # (doc_id, mh0..mh{k-1}, n_sh)
@@ -775,40 +754,32 @@ class NearDupState(NamedTuple):
             release_local_checkpoint(df)
 
 
-def _ckpt(df: DataFrame, enabled: bool) -> DataFrame:
-    return df.localCheckpoint(eager=True) if enabled else df
-
-
 def build_near_dup_state(
     docs: DataFrame,
     max_bucket_size: int | None = None,
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
 ) -> NearDupState:
     """Full near-dup computation that ALSO materializes the intermediate
     tables ``apply_near_dup_changes`` maintains incrementally. Same
     semantics as the dd_near_dup_pairs pipeline (LSH candidates capped at
     ``max_bucket_size``, exact-Jaccard verification at ``threshold``)."""
-    shingled = _ckpt(doc_shingles(docs, text_col, id_col), checkpoint)
-    sigs = _ckpt(
-        minhash_signatures(shingled, id_col, with_sizes=True), checkpoint
-    )
-    banded = _ckpt(band_keys(sigs, id_col), checkpoint)
-    bucket_sizes = _ckpt(
-        banded.groupBy("bkey").agg(F.count(F.lit(1)).alias("bsz")), checkpoint
+    shingled = ckpt(doc_shingles(docs, text_col, id_col))
+    sigs = ckpt(minhash_signatures(shingled, id_col, with_sizes=True))
+    banded = ckpt(band_keys(sigs, id_col))
+    bucket_sizes = ckpt(
+        banded.groupBy("bkey").agg(F.count(F.lit(1)).alias("bsz"))
     )
     cands = lsh_candidate_pairs(sigs, id_col, max_bucket_size)
-    pairs = _ckpt(
+    pairs = ckpt(
         jaccard_pairs(
             shingled,
             cands,
             id_col,
             threshold,
             sizes=sigs.select(id_col, "n_sh"),
-        ),
-        checkpoint,
+        )
     )
     return NearDupState(shingled, sigs, banded, bucket_sizes, pairs)
 
@@ -842,7 +813,6 @@ def apply_near_dup_changes(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
 ) -> NearDupState:
     """Incremental near-dup maintenance through a CDC batch — the dedup
     analog of refresh_aggregate_groups (operators/cdc.py): re-shingle
@@ -883,34 +853,21 @@ def apply_near_dup_changes(
     # affected buckets: every bucket holding a touched doc in old OR new
     # banding — small (≤ |touched| × n_bands), lineage-cut for reuse
     b_old_t = state.banded.join(tb, [id_col])
-    # scratch snapshots follow the caller's checkpoint choice: eager
-    # checkpoints can only be released when the consumers are themselves
-    # materialized (checkpoint=True); a lazy run must stay fully lazy or
-    # the scratch blocks leak for the lifetime of the returned plans
-    aff = _ckpt(
-        b_old_t.select("bkey").union(b_u.select("bkey")).distinct(), checkpoint
-    )
+    aff = ckpt(b_old_t.select("bkey").union(b_u.select("bkey")).distinct())
     # new state membership: one anti-join + union per table
-    sh_new = _ckpt(
-        state.shingles.join(tb, [id_col], "left_anti").unionByName(sh_u),
-        checkpoint,
+    sh_new = ckpt(
+        state.shingles.join(tb, [id_col], "left_anti").unionByName(sh_u)
     )
-    sig_new = _ckpt(
-        state.sigs.join(tb, [id_col], "left_anti").unionByName(sig_u),
-        checkpoint,
+    sig_new = ckpt(
+        state.sigs.join(tb, [id_col], "left_anti").unionByName(sig_u)
     )
-    b_new = _ckpt(
-        state.banded.join(tb, [id_col], "left_anti").unionByName(b_u),
-        checkpoint,
-    )
+    b_new = ckpt(state.banded.join(tb, [id_col], "left_anti").unionByName(b_u))
     # incremental bucket sizes: only affected keys change. Old sizes of
     # affected buckets (small: inner-broadcast) full-outer the ±delta.
     rem = b_old_t.groupBy("bkey").agg(F.count(F.lit(1)).alias("n_rem"))
     add = b_u.groupBy("bkey").agg(F.count(F.lit(1)).alias("n_add"))
-    aff_sizes_old = _ckpt(
-        state.bucket_sizes.join(F.broadcast(aff), ["bkey"]), checkpoint
-    )
-    upd_sizes = _ckpt(
+    aff_sizes_old = ckpt(state.bucket_sizes.join(F.broadcast(aff), ["bkey"]))
+    upd_sizes = ckpt(
         aff_sizes_old.join(rem, ["bkey"], "full")
         .join(add, ["bkey"], "full")
         .select(
@@ -921,13 +878,11 @@ def apply_near_dup_changes(
                 + F.coalesce(F.col("n_add"), F.lit(0))
             ).alias("bsz"),
         )
-        .filter(F.col("bsz") > 0),
-        checkpoint,
+        .filter(F.col("bsz") > 0)
     )
-    sizes_new = _ckpt(
+    sizes_new = ckpt(
         state.bucket_sizes.join(F.broadcast(aff), ["bkey"], "left_anti")
-        .unionByName(upd_sizes),
-        checkpoint,
+        .unionByName(upd_sizes)
     )
     # candidate pairs of affected buckets, old and new state, under the
     # cap as evaluated against that state's bucket sizes
@@ -941,9 +896,7 @@ def apply_near_dup_changes(
         else aff_sizes_old
     ).select("bkey")
     cand_new_aff = _bucket_pairs(b_new, ok_new, id_col)
-    cand_old_aff = _ckpt(
-        _bucket_pairs(state.banded, ok_old, id_col), checkpoint
-    )
+    cand_old_aff = ckpt(_bucket_pairs(state.banded, ok_old, id_col))
     # prior pairs split: untouched by any affected bucket → carry over
     p_keep = state.pairs.join(cand_old_aff, ["id_a", "id_b"], "left_anti")
     p_aff = state.pairs.join(cand_old_aff, ["id_a", "id_b"], "left_semi")
@@ -975,23 +928,21 @@ def apply_near_dup_changes(
         threshold,
         sizes=sig_new.select(id_col, "n_sh"),
     )
-    pairs_new = _ckpt(
-        p_keep.unionByName(resurrected).unionByName(verified_new).distinct(),
-        checkpoint,
+    pairs_new = ckpt(
+        p_keep.unionByName(resurrected).unionByName(verified_new).distinct()
     )
-    if checkpoint:
-        # every consumer of the internal snapshots is now materialized —
-        # free them so chained batches don't accumulate scratch blocks
-        for scratch in (aff, aff_sizes_old, upd_sizes, cand_old_aff):
-            release_local_checkpoint(scratch)
+    # every consumer of the internal snapshots is now materialized —
+    # free them so chained batches don't accumulate scratch blocks
+    for scratch in (aff, aff_sizes_old, upd_sizes, cand_old_aff):
+        release_local_checkpoint(scratch)
     return NearDupState(sh_new, sig_new, b_new, sizes_new, pairs_new)
 
 
 class ContainmentState(NamedTuple):
     """Materialized incremental containment-dedup state — the
-    containment analog of NearDupState. Four frames, lineage-cut when
-    built with ``checkpoint=True`` (at cluster scale these are parquet
-    state tables maintained between daily CDC batches)."""
+    containment analog of NearDupState. Four frames, lineage-cut (at
+    cluster scale these are parquet state tables maintained between
+    daily CDC batches)."""
 
     shingles: DataFrame  # (doc_id, sh64) distinct hashed shingles
     dfreq: DataFrame     # (sh64, df) corpus-wide document frequency
@@ -1012,28 +963,20 @@ def build_containment_state(
     threshold: float = 0.2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
 ) -> ContainmentState:
     """Full containment computation that ALSO materializes the tables
     ``apply_containment_changes`` maintains incrementally. Same
     semantics as ``containment_pairs`` (rare domain = df ≤ ``df_cap``,
     emit pairs with containment ≥ ``threshold``)."""
-    shingled = _ckpt(doc_shingles(docs, text_col, id_col), checkpoint)
-    dfreq = _ckpt(
-        shingled.groupBy("sh64").agg(F.count(F.lit(1)).alias("df")),
-        checkpoint,
-    )
+    shingled = ckpt(doc_shingles(docs, text_col, id_col))
+    dfreq = ckpt(shingled.groupBy("sh64").agg(F.count(F.lit(1)).alias("df")))
     hot = dfreq.filter(F.col("df") > df_cap).select("sh64")
     rare = shingled.join(F.broadcast(hot), ["sh64"], "left_anti")
-    sizes = _ckpt(
-        rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rare")),
-        checkpoint,
-    )
-    pairs = _ckpt(
+    sizes = ckpt(rare.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rare")))
+    pairs = ckpt(
         # thread the already-derived rare postings so the corpus-wide
         # df groupBy and hot anti-join run once, not twice per build
-        containment_pairs(shingled, id_col, df_cap, threshold, rare=rare),
-        checkpoint,
+        containment_pairs(shingled, id_col, df_cap, threshold, rare=rare)
     )
     return ContainmentState(shingled, dfreq, sizes, pairs)
 
@@ -1046,7 +989,6 @@ def apply_containment_changes(
     threshold: float = 0.2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint: bool = True,
 ) -> ContainmentState:
     """Incremental containment-dedup maintenance through a CDC batch —
     the containment twin of ``apply_near_dup_changes``, with one extra
@@ -1090,18 +1032,17 @@ def apply_containment_changes(
     # df delta over the batch's shingle occurrences (batch-sized)
     rem = sh_old_t.groupBy("sh64").agg(F.count(F.lit(1)).alias("__rem"))
     add = sh_u.groupBy("sh64").agg(F.count(F.lit(1)).alias("__add"))
-    delta = _ckpt(
+    delta = ckpt(
         rem.join(add, ["sh64"], "full").select(
             "sh64",
             F.coalesce(F.col("__rem"), F.lit(0)).alias("__rem"),
             F.coalesce(F.col("__add"), F.lit(0)).alias("__add"),
-        ),
-        checkpoint,
+        )
     )
     dkeys = F.broadcast(delta.select("sh64"))
     # old df rows for the delta keys only (small: inner broadcast join)
     aff_df_old = state.dfreq.join(dkeys, ["sh64"])
-    merged = _ckpt(
+    merged = ckpt(
         delta.join(aff_df_old, ["sh64"], "left").select(
             "sh64",
             F.coalesce(F.col("df"), F.lit(0)).alias("__old_df"),
@@ -1110,39 +1051,34 @@ def apply_containment_changes(
                 - F.col("__rem")
                 + F.col("__add")
             ).alias("__new_df"),
-        ),
-        checkpoint,
+        )
     )
     flipped = merged.filter(
         (F.col("__old_df") > df_cap) != (F.col("__new_df") > df_cap)
     ).select("sh64")
-    dfreq_new = _ckpt(
+    dfreq_new = ckpt(
         state.dfreq.join(dkeys, ["sh64"], "left_anti").unionByName(
             merged.filter(F.col("__new_df") > 0).select(
                 "sh64", F.col("__new_df").alias("df")
             )
-        ),
-        checkpoint,
+        )
     )
-    sh_new = _ckpt(
-        state.shingles.join(tb, [id_col], "left_anti").unionByName(sh_u),
-        checkpoint,
+    sh_new = ckpt(
+        state.shingles.join(tb, [id_col], "left_anti").unionByName(sh_u)
     )
     # D*: touched docs + every holder of a flipped shingle
-    d_star = _ckpt(
+    d_star = ckpt(
         touched.unionByName(
             sh_new.join(F.broadcast(flipped), ["sh64"]).select(id_col)
-        ).distinct(),
-        checkpoint,
+        ).distinct()
     )
     db = F.broadcast(d_star)
     hot_new = dfreq_new.filter(F.col("df") > df_cap).select("sh64")
     rare_new = sh_new.join(F.broadcast(hot_new), ["sh64"], "left_anti")
-    ra = _ckpt(rare_new.join(db, [id_col]), checkpoint)
+    ra = ckpt(rare_new.join(db, [id_col]))
     sz_star = ra.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_rare"))
-    sizes_new = _ckpt(
-        state.sizes.join(db, [id_col], "left_anti").unionByName(sz_star),
-        checkpoint,
+    sizes_new = ckpt(
+        state.sizes.join(db, [id_col], "left_anti").unionByName(sz_star)
     )
     # re-derived pairs: every shared rare shingle between a D* doc and
     # ANY doc. Both-in-D* pairs generate once from each side — the
@@ -1186,19 +1122,17 @@ def apply_containment_changes(
     )
     d_a = d_star.select(F.col(id_col).alias("id_a"))
     d_b = d_star.select(F.col(id_col).alias("id_b"))
-    pairs_new = _ckpt(
+    pairs_new = ckpt(
         state.pairs.join(F.broadcast(d_a), ["id_a"], "left_anti")
         .join(F.broadcast(d_b), ["id_b"], "left_anti")
         # the second USING join moved id_b to the front — restore the
         # containment_pairs column order before the union
         .select(*state.pairs.columns)
-        .unionByName(fresh.select(*state.pairs.columns)),
-        checkpoint,
+        .unionByName(fresh.select(*state.pairs.columns))
     )
-    if checkpoint:
-        # all consumers of the scratch snapshots are now materialized
-        for scratch in (delta, merged, ra):
-            release_local_checkpoint(scratch)
+    # all consumers of the scratch snapshots are now materialized
+    for scratch in (delta, merged, ra):
+        release_local_checkpoint(scratch)
     return ContainmentState(sh_new, dfreq_new, sizes_new, pairs_new)
 
 

@@ -330,9 +330,12 @@ def quality_score(col: Column) -> Column:
     length_component = F.least(n_tok / 100.0, F.lit(1.0))
     toklen_component = F.least(mean_tok_len / 8.0, F.lit(1.0))
     stop_component = F.least(stop_ratio * 5.0, F.lit(1.0))
-    return F.round(
-        0.4 * length_component + 0.3 * toklen_component + 0.3 * stop_component, 6
-    )
+    raw = 0.4 * length_component + 0.3 * toklen_component + 0.3 * stop_component
+    # DuckDB's ROUND(x, 6) is round(x * 1e6) / 1e6 on the binary double;
+    # F.round(x, 6) rounds HALF_UP on x's decimal string and so disagrees
+    # at exact decimal ties (0.5123125 -> 0.512313 vs 0.512312). A
+    # scale-0 round of x * 1e6 sees the same binary value DuckDB does.
+    return F.round(raw * 1e6) / 1e6
 
 
 def language_scores(col: Column) -> dict[str, Column]:

@@ -111,36 +111,6 @@ def union_change_streams(*streams: DataFrame) -> DataFrame:
     return out
 
 
-def recover_parent_key(
-    line_changes: DataFrame,
-    lines: DataFrame,
-    line_key: str,
-    parent_key: str,
-) -> DataFrame:
-    """Line-level change rows only carry the line PK; join back to the
-    line table to recover the parent (invoice) key — reference
-    sqls/storedprocedure.sql:23-26 (``JOIN InvoiceLine l ON l.LineId =
-    CT.LineId``). The projection keeps only (parent_key, version) so the
-    join input is as narrow as the scan allows."""
-    return line_changes.join(lines.select(line_key, parent_key), line_key, "inner")
-
-
-def enrich_with_header(
-    changed_keys: DataFrame,
-    header: DataFrame,
-    key_col: str,
-    broadcast_changes: bool = True,
-) -> DataFrame:
-    """Join the (small) set of changed keys to the base/header table —
-    reference sqls/storedprocedure.sql:55 (``JOIN InvoiceHeader h ON
-    h.InvoiceId = a.InvoiceId``).
-
-    In a CDC batch the changed-key side is tiny relative to the base table:
-    broadcast it so the big side never shuffles."""
-    small = F.broadcast(changed_keys) if broadcast_changes else changed_keys
-    return header.join(small, key_col, "inner")
-
-
 def bounded_ordered_batch(
     df: DataFrame,
     limit: int,

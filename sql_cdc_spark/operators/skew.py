@@ -77,16 +77,3 @@ def salted_join(
     )
     joined = salted_fact.join(salted_dim, [key, "__salt"], how)
     return joined.drop("__salt")
-
-
-def explain_skew(df: DataFrame, key: str, top_n: int = 5) -> DataFrame:
-    """Diagnostic: per-key row counts of the heaviest keys with their
-    share of the table — what you run before deciding to salt."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 6))
-        .orderBy(F.desc("n_rows"), F.col(key))
-        .limit(top_n)
-    )

@@ -42,49 +42,6 @@ def _registry() -> dict[str, QueryEntry]:
     )
 
     reg: dict[str, QueryEntry] = {}
-    # Registry ORDER is part of the driver contract: the driver's
-    # correctness harness checks the FIRST 50 entries only. Rotation
-    # schedule (every round): (1) any query ADDED or CHANGED this round
-    # MUST be in the window (tests/test_operator_guards.py enforces the
-    # current round's list); (2) remaining slots go to the stalest greens
-    # — the families whose last driver check is oldest; (3) demoted
-    # long-greens stay covered every round by the local pytest oracle
-    # suite, which runs ALL queries vs DuckDB at sf0.01.
-    # Round-10 rotation (executes the plan published in r9; the r1-r9
-    # narratives live in git history): the window below is explicit.
-    # (1) SEVEN changed-query slots — all optimization-round plan
-    #   changes, every one proven value-identical by the full-gate
-    #   oracle before landing (r9 precedent for exceeding the ~4-6 cap:
-    #   two shared-base families account for five of the seven, and
-    #   leaving a changed query unchecked the round its plan changed is
-    #   worse than one fewer rotation row):
-    #   - sim_ann_recall_eval: exact side through the Arrow probe-top-k
-    #     kernel + single-scan ann side (VERDICT r9 #2 ruling; 24
-    #     parquet scans -> 3, 1.71 -> 0.82 s at sf0.1);
-    #   - dd_jaccard_pairs, dd_source_overlap, crp_fuzzy_contamination:
-    #     now feed the session-cached family shingle frame (VERDICT r9
-    #     #6; one shingle explode + signature aggregate per session
-    #     across the whole dedup family);
-    #   - txt_winnow_pairs + txt_winnow_fingerprints: session-cached
-    #     winnow fingerprint base (the scan fed FOUR subtrees per
-    #     session; 3.40 -> ~0.5 s warm at sf0.1);
-    #   - crp_dsir_select: fused raw+target census (one groupBy with
-    #     count + count_if instead of two census shuffles and a second
-    #     join; 3 tokenize passes -> 2).
-    #   NOTE: doc_shingles' kernel internals also changed (chunked
-    #   RecordBatch flush + hashed-domain per-doc dedup, VERDICT r9 #4 /
-    #   ADVICE r9) — plan-invisible and pinned bit-identical by
-    #   test_doc_shingles_kernel_matches_exact; three of the changed
-    #   slots above are shingle consumers, double-covering it.
-    # (2) The 13 remaining r5 greens (staleness 4 — the oldest
-    #   evidence), exactly the list published in r9.
-    # (3) The remaining 30 slots pay the r6 cohort (staleness 3, 40
-    #   names) in alphabetical order (sim_ann_recall_eval is already in
-    #   the changed block). The 9 left over — txt_bm25_search,
-    #   txt_bpe_pair_census, txt_bpe_tokens, txt_dup_passage_census,
-    #   txt_language_id, txt_ngram_novelty, txt_quality_score,
-    #   txt_rolling_fingerprint, txt_tfidf_topterms — stay covered by
-    #   the local full-gate oracle and head any future rotation.
     for mod in (
         relational_q,
         functions_q,
@@ -103,13 +60,13 @@ def _registry() -> dict[str, QueryEntry]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         reg.update(mod.QUERIES)
-    # The round-10 driver window, explicit and order-significant: the
-    # driver hash-checks exactly these 50, top to bottom. Guarded by
-    # tests/test_operator_guards.py::test_registry_window_holds_all_round10_queries
-    # (membership AND position, VERDICT r8 #7).
+    # Registry ORDER is part of the driver contract: the driver
+    # hash-checks the FIRST 50 entries only, top to bottom, so the window
+    # below is explicit and order-significant. Every query added or
+    # changed in a round must sit inside it; the rest stay covered by the
+    # full-tier oracle suite. Membership and position are pinned by
+    # tests/test_operator_guards.py::test_registry_window_holds_all_round10_queries.
     window = [
-        # -- changed this round (r10 optimization: kernel election,
-        #    session-cache shares, census fusion — see rotation note) --
         "sim_ann_recall_eval",
         "dd_jaccard_pairs",
         "dd_source_overlap",
@@ -117,7 +74,6 @@ def _registry() -> dict[str, QueryEntry]:
         "crp_dsir_select",
         "txt_winnow_pairs",
         "txt_winnow_fingerprints",
-        # -- rotation debt: the 13 remaining r5 greens (staleness 4) ---
         "rel_semi_join_big_spenders",
         "rel_top_revenue_orders",
         "rel_topn_other_rollup",
@@ -131,7 +87,6 @@ def _registry() -> dict[str, QueryEntry]:
         "win_latest_n_per_user",
         "win_moving_avg",
         "win_running_total",
-        # -- rotation debt: the r6 cohort (staleness 3), alphabetical --
         "cdc_changes_scan",
         "cdc_flagship_documents",
         "cdc_net_changes_enriched",
@@ -162,8 +117,6 @@ def _registry() -> dict[str, QueryEntry]:
         "sim_multiprobe_topk",
         "sim_power_iteration",
         "sim_topk_cosine",
-        # (the 9 remaining r6 greens — the txt_* tail — head any future
-        #  rotation; all 192 stay covered by the full-gate oracle)
     ]
     assert len(window) == 50, f"window must fill all 50 slots: {len(window)}"
     missing = [n for n in window if n not in reg]

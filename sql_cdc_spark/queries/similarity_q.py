@@ -1515,13 +1515,6 @@ def mutual_edges(best: DataFrame) -> DataFrame:
     )
 
 
-def _mutual_edges(emb: DataFrame) -> DataFrame:
-    """Undirected mutual-NN edge set (id_a < id_b, symmetric cos_sim)
-    through the exact-JVM election — the cross-engine reference form
-    of sim_mutual_knn's kernel-strategy plan (bit-equal by test)."""
-    return mutual_edges(knn_join(emb))
-
-
 def _mutual_knn_sql() -> str:
     knn = _knn_join_sql().strip()
     return f"""

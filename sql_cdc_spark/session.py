@@ -15,6 +15,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Pin the JVM default locale (ADVICE r9): the Arrow shingling kernel's
+# bit-identity to the JVM reference relies on Python str.lower() matching
+# UTF8String.toLowerCase, whose non-ASCII path delegates to java
+# String.toLowerCase under the DEFAULT locale — on a tr/az-locale JVM 'I'
+# lowercases to dotless 'ı' on the JVM side but 'i' in Python, a silent
+# kernel-vs-reference divergence. en_US makes the parity contract hold on
+# any host. It applies at JVM launch only, so get_spark checks the
+# running JVM's locale after start.
+LOCALE_JAVA_OPTS = "-Duser.language=en -Duser.country=US"
+_JAVA_OPTS_KEYS = (
+    "spark.driver.extraJavaOptions",
+    "spark.executor.extraJavaOptions",
+)
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -93,30 +107,25 @@ def get_spark(
         # rejects; read as long and convert in tables.load (lossless — the
         # data is microsecond-precision)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Pin the JVM default locale (ADVICE r9): the Arrow shingling
-        # kernel's bit-identity to the JVM reference relies on Python
-        # str.lower() matching UTF8String.toLowerCase, whose non-ASCII
-        # path delegates to java String.toLowerCase under the DEFAULT
-        # locale — on a tr/az-locale JVM 'I' lowercases to dotless 'ı'
-        # on the JVM side but 'i' in Python, a silent kernel-vs-
-        # reference divergence. en_US makes the parity contract hold on
-        # any host. (Applies at JVM launch; a pre-existing JVM in this
-        # process keeps its locale, which on this box is already en.)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Duser.language=en -Duser.country=US",
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            "-Duser.language=en -Duser.country=US",
-        )
         # BI endpoint (sources/biserver.py): Thrift-server connections
         # share THIS session so JDBC clients see the registered temp
         # views; inert unless start_bi_endpoint is called
         .config("spark.sql.hive.thriftServer.singleSession", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    for key in _JAVA_OPTS_KEYS:
+        # merged, not replaced; the pin goes last so it wins over any
+        # -Duser.* the caller passes
+        conf[key] = f"{conf.get(key, '')} {LOCALE_JAVA_OPTS}".strip()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    lang = spark._jvm.java.util.Locale.getDefault().getLanguage()
+    if lang != "en":
+        raise RuntimeError(
+            f"JVM default locale language is {lang!r}, not 'en': the "
+            "shingling kernel's parity with the JVM reference does not "
+            "hold (a JVM started before get_spark keeps its own locale)"
+        )
     return spark

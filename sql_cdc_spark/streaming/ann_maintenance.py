@@ -77,16 +77,12 @@ def build_postings(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    checkpoint: bool = True,
 ):
     """Initial index build: sample-fit the quantizer (ivf_assign) and
     materialize the posting table. Returns (postings, model); the model
     is the frozen quantizer every later batch assigns under."""
     assigned, model = ivf_assign(vectors, n_clusters, vec_col, id_col, seed=seed)
-    postings = assigned.select(id_col, "cluster")
-    if checkpoint:
-        postings = postings.localCheckpoint(eager=True)
-    return postings, model
+    return FEED.ckpt(assigned.select(id_col, "cluster")), model
 
 
 def apply_postings_changes(
@@ -94,7 +90,6 @@ def apply_postings_changes(
     upserts: DataFrame,
     deletes: DataFrame,
     model,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """One maintenance round: remove every changed key, re-add upserted
     vectors at their model-assigned cluster.
@@ -109,10 +104,7 @@ def apply_postings_changes(
     changed = upserts.select("vec_id").unionByName(deletes).distinct()
     survivors = postings.join(F.broadcast(changed), "vec_id", "left_anti")
     added = assign_under_model(model, upserts)
-    out = survivors.unionByName(added)
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return FEED.ckpt(survivors.unionByName(added))
 
 
 def run_ann_maintenance(

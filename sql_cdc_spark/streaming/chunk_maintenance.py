@@ -56,18 +56,14 @@ class ChunkState(NamedTuple):
         release_local_checkpoint(self.chunks)
 
 
-_ckpt = FEED.ckpt
-
-
 def build_chunk_state(
     docs: DataFrame,
     chunk_chars: int = CHUNK_CHARS,
     stride: int = CHUNK_STRIDE,
-    checkpoint: bool = True,
 ) -> ChunkState:
     """Full chunking pass over a (doc_id, text) corpus."""
     return ChunkState(
-        _ckpt(TX.chunk_spans(docs, chunk_chars, stride), checkpoint)
+        FEED.ckpt(TX.chunk_spans(docs, chunk_chars, stride))
     )
 
 
@@ -77,7 +73,6 @@ def apply_chunk_changes(
     deletes: DataFrame,
     chunk_chars: int = CHUNK_CHARS,
     stride: int = CHUNK_STRIDE,
-    checkpoint: bool = True,
 ) -> ChunkState:
     """One maintenance round: drop every touched doc's chunks, append
     the upserted docs' fresh spans. Compute is O(|batch| chars); the
@@ -85,7 +80,7 @@ def apply_chunk_changes(
     touched = upserts.select("doc_id").unionByName(deletes).distinct()
     kept = state.chunks.join(F.broadcast(touched), "doc_id", "left_anti")
     fresh = TX.chunk_spans(upserts, chunk_chars, stride)
-    return ChunkState(_ckpt(kept.unionByName(fresh), checkpoint))
+    return ChunkState(FEED.ckpt(kept.unionByName(fresh)))
 
 
 def run_chunk_maintenance(

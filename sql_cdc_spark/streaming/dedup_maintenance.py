@@ -39,13 +39,6 @@ from sql_cdc_spark.streaming import feed as FEED
 CHANGE_SCHEMA = "doc_id long, text string, op string, change_version long"
 
 
-def read_document_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet document-change feed."""
-    return FEED.read_feed(spark, feed_dir, CHANGE_SCHEMA, max_files_per_trigger)
-
-
 def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Latest-op-per-doc collapse of one change batch → (upserts,
     deletes) — streaming/feed.py::collapse_latest on (doc_id, text)."""

@@ -59,9 +59,6 @@ class DSIRState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
 def _doc_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, is_tgt, sh64, n): per-document bigram occurrence counts
     hashed to the 60-bit portable key, flagged with the SAME quality
@@ -83,11 +80,11 @@ def _census(dg: DataFrame, cnt_col: str) -> DataFrame:
     return dg.groupBy("sh64").agg(F.sum("n").alias(cnt_col))
 
 
-def build_dsir_state(docs: DataFrame, checkpoint: bool = True) -> DSIRState:
+def build_dsir_state(docs: DataFrame) -> DSIRState:
     """Full build from a (doc_id, text) corpus."""
-    dg = _ckpt(_doc_grams(docs), checkpoint)
-    raw = _ckpt(_census(dg, "raw_cnt"), checkpoint)
-    tgt = _ckpt(_census(dg.filter(F.col("is_tgt")), "tgt_cnt"), checkpoint)
+    dg = FEED.ckpt(_doc_grams(docs))
+    raw = FEED.ckpt(_census(dg, "raw_cnt"))
+    tgt = FEED.ckpt(_census(dg.filter(F.col("is_tgt")), "tgt_cnt"))
     return DSIRState(dg, raw, tgt)
 
 
@@ -107,7 +104,6 @@ def apply_dsir_changes(
     state: DSIRState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> DSIRState:
     """One maintenance round. A quality flip needs no special case: the
     old rows leave under their stored flag, the new rows enter under the
@@ -126,7 +122,7 @@ def apply_dsir_changes(
         F.broadcast(changed), "doc_id", "left_anti"
     ).unionByName(new)
     return DSIRState(
-        _ckpt(dg2, checkpoint), _ckpt(raw2, checkpoint), _ckpt(tgt2, checkpoint)
+        FEED.ckpt(dg2), FEED.ckpt(raw2), FEED.ckpt(tgt2)
     )
 
 

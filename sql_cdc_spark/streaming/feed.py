@@ -17,11 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def ckpt(df: DataFrame, enabled: bool) -> DataFrame:
-    """Eager localCheckpoint when enabled — the lineage cut every
-    incremental state rewrite needs so chained batches don't replan the
-    whole history."""
-    return df.localCheckpoint(eager=True) if enabled else df
+def ckpt(df: DataFrame) -> DataFrame:
+    """Eager localCheckpoint — the lineage cut every incremental state
+    rewrite needs so chained batches don't replan the whole history."""
+    return df.localCheckpoint(eager=True)
 
 
 def read_feed(

@@ -61,9 +61,6 @@ class KnnState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
 def _best_with_bucket(vb: DataFrame) -> DataFrame:
     """The election's rows tagged with the elector's bucket (the anti-
     join key incremental application needs). Through the Arrow kernel
@@ -73,44 +70,39 @@ def _best_with_bucket(vb: DataFrame) -> DataFrame:
     return elect_nearest_arrow(vb, with_bucket=True)
 
 
-def build_knn_state(vectors: DataFrame, checkpoint: bool = True) -> KnnState:
+def build_knn_state(vectors: DataFrame) -> KnnState:
     """Full build from a (vec_id, embedding) corpus."""
-    vb = _ckpt(bucket_vectors(vectors), checkpoint)
-    return KnnState(vb, _ckpt(_best_with_bucket(vb), checkpoint))
+    vb = FEED.ckpt(bucket_vectors(vectors))
+    return KnnState(vb, FEED.ckpt(_best_with_bucket(vb)))
 
 
 def apply_knn_changes(
     state: KnnState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> KnnState:
     """One maintenance round: re-elect exactly the buckets the batch's
     vectors leave or enter; every other bucket's rows carry over."""
     changed = upserts.select("vec_id").unionByName(deletes).distinct()
     cb = F.broadcast(changed)
     new_vb = bucket_vectors(upserts)
-    aff = _ckpt(
+    aff = FEED.ckpt(
         state.vb.join(cb, "vec_id", "left_semi")
         .select("bucket")
         .unionByName(new_vb.select("bucket"))
-        .distinct(),
-        checkpoint,
+        .distinct()
     )
     ab = F.broadcast(aff)
-    vb2 = _ckpt(
-        state.vb.join(cb, "vec_id", "left_anti").unionByName(new_vb),
-        checkpoint,
+    vb2 = FEED.ckpt(
+        state.vb.join(cb, "vec_id", "left_anti").unionByName(new_vb)
     )
     re_elected = _best_with_bucket(vb2.join(ab, "bucket", "left_semi"))
-    best2 = _ckpt(
+    best2 = FEED.ckpt(
         state.best.join(ab, "bucket", "left_anti")
         .select(*state.best.columns)
-        .unionByName(re_elected.select(*state.best.columns)),
-        checkpoint,
+        .unionByName(re_elected.select(*state.best.columns))
     )
-    if checkpoint:
-        release_local_checkpoint(aff)
+    release_local_checkpoint(aff)
     return KnnState(vb2, best2)
 
 

@@ -57,9 +57,6 @@ class LMState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
 def _is_train(docs: DataFrame) -> DataFrame:
     """The train-split rows of any (doc_id, …) frame — REUSES the batch
     pipeline's split assignment (functions/sampling.py::with_split), so
@@ -86,13 +83,11 @@ def _doc_grams(docs: DataFrame) -> DataFrame:
     )
 
 
-def build_lm_state(docs: DataFrame, checkpoint: bool = True) -> LMState:
+def build_lm_state(docs: DataFrame) -> LMState:
     """Full build of the LM state from a (doc_id, text) corpus — only
     train-split documents contribute."""
-    tg = _ckpt(_doc_grams(_is_train(docs)), checkpoint)
-    lm = _ckpt(
-        tg.groupBy("sh64").agg(F.sum("n").alias("cnt")), checkpoint
-    )
+    tg = FEED.ckpt(_doc_grams(_is_train(docs)))
+    lm = FEED.ckpt(tg.groupBy("sh64").agg(F.sum("n").alias("cnt")))
     return LMState(tg, lm)
 
 
@@ -100,7 +95,6 @@ def apply_lm_changes(
     state: LMState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> LMState:
     """One maintenance round: test/val-split changes are dropped at the
     scan (split is a doc_id hash — membership never moves); train-side
@@ -124,7 +118,7 @@ def apply_lm_changes(
     tg2 = state.tg.join(
         F.broadcast(changed), "doc_id", "left_anti"
     ).unionByName(new)
-    return LMState(_ckpt(tg2, checkpoint), _ckpt(lm2, checkpoint))
+    return LMState(FEED.ckpt(tg2), FEED.ckpt(lm2))
 
 
 def score_documents(state: LMState, docs: DataFrame) -> DataFrame:

@@ -109,19 +109,15 @@ def build_manifest_state(
     min_quality: float = 0.5,
     near_dup_threshold: float = 0.5,
     lsh_max_bucket: int = 50,
-    checkpoint: bool = True,
 ) -> ManifestState:
     """Full build that materializes the tables apply_manifest_changes
     maintains incrementally — same stage semantics, same parameters as
     prepare_training_corpus."""
-    gated = _gate(docs, min_tokens, min_quality)
-    if checkpoint:
-        gated = gated.localCheckpoint(eager=True)
+    gated = FEED.ckpt(_gate(docs, min_tokens, min_quality))
     nd = DD.build_near_dup_state(
         _survivors(gated),
         max_bucket_size=lsh_max_bucket,
         threshold=near_dup_threshold,
-        checkpoint=checkpoint,
     )
     return ManifestState(gated=gated, nd=nd)
 
@@ -135,7 +131,6 @@ def apply_manifest_changes(
     min_quality: float = 0.5,
     near_dup_threshold: float = 0.5,
     lsh_max_bucket: int = 50,
-    checkpoint: bool = True,
 ) -> ManifestState:
     """Apply one collapsed change batch (upserts: doc_id/lang/source/text,
     deletes: doc_id) and return the next state. Equals a from-scratch
@@ -168,11 +163,9 @@ def apply_manifest_changes(
         .distinct()
     )
 
-    new_gated = (
+    new_gated = FEED.ckpt(
         state.gated.join(touched, "doc_id", "left_anti").unionByName(gated_up)
     )
-    if checkpoint:
-        new_gated = new_gated.localCheckpoint(eager=True)
 
     before = _survivors(
         state.gated.join(affected, "digest", "left_semi")
@@ -194,7 +187,6 @@ def apply_manifest_changes(
         nd_deletes,
         max_bucket_size=lsh_max_bucket,
         threshold=near_dup_threshold,
-        checkpoint=checkpoint,
     )
     return ManifestState(gated=new_gated, nd=nd)
 

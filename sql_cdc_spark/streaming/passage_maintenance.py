@@ -55,9 +55,6 @@ class PassageState(NamedTuple):
         release_local_checkpoint(self.counts)
 
 
-_ckpt = FEED.ckpt
-
-
 def _doc_passages(docs: DataFrame) -> DataFrame:
     """Per-doc passage multiset: disjoint PASSAGE_WORDS-word tiles of
     the normalized token stream — literally the same TX.passage_chunks
@@ -78,14 +75,10 @@ def _doc_passages(docs: DataFrame) -> DataFrame:
     )
 
 
-def build_passage_state(
-    docs: DataFrame, checkpoint: bool = True
-) -> PassageState:
+def build_passage_state(docs: DataFrame) -> PassageState:
     """Full build from a (doc_id, source, text) corpus."""
-    dp = _ckpt(_doc_passages(docs), checkpoint)
-    counts = _ckpt(
-        dp.groupBy("passage").agg(F.sum("k").alias("n_occ")), checkpoint
-    )
+    dp = FEED.ckpt(_doc_passages(docs))
+    counts = FEED.ckpt(dp.groupBy("passage").agg(F.sum("k").alias("n_occ")))
     return PassageState(dp, counts)
 
 
@@ -93,7 +86,6 @@ def apply_passage_changes(
     state: PassageState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> PassageState:
     """One maintenance round: counts' = counts + new multisets − old
     multisets (drop ≤ 0). The changed-key set is a CDC batch (small →
@@ -116,7 +108,7 @@ def apply_passage_changes(
     dp2 = state.doc_passages.join(
         F.broadcast(changed), "doc_id", "left_anti"
     ).unionByName(new)
-    return PassageState(_ckpt(dp2, checkpoint), _ckpt(counts2, checkpoint))
+    return PassageState(FEED.ckpt(dp2), FEED.ckpt(counts2))
 
 
 def dup_passage_census(state: PassageState) -> DataFrame:

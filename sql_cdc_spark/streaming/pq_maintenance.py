@@ -71,17 +71,13 @@ def build_codes(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    checkpoint: bool = True,
 ):
     """Initial index build: sample-fit the per-subspace codebooks
     (pq_codebooks — integer-micros centroids, bounded collect) and
     encode the corpus. Returns (codes, books); ``books`` is the frozen
     quantizer every later batch encodes under."""
     books = pq_codebooks(vectors, m, k, vec_col, seed=seed)
-    codes = pq_encode(vectors, books, vec_col, id_col)
-    if checkpoint:
-        codes = codes.localCheckpoint(eager=True)
-    return codes, books
+    return FEED.ckpt(pq_encode(vectors, books, vec_col, id_col)), books
 
 
 def apply_codes_changes(
@@ -89,7 +85,6 @@ def apply_codes_changes(
     upserts: DataFrame,
     deletes: DataFrame,
     books,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """One maintenance round: remove every changed key, re-add upserted
     vectors at their frozen-codebook encoding.
@@ -103,10 +98,7 @@ def apply_codes_changes(
     changed = upserts.select("vec_id").unionByName(deletes).distinct()
     survivors = codes.join(F.broadcast(changed), "vec_id", "left_anti")
     added = pq_encode(upserts, books)
-    out = survivors.unionByName(added)
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return FEED.ckpt(survivors.unionByName(added))
 
 
 def run_pq_maintenance(

@@ -63,9 +63,6 @@ class QualityState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
 def _doc_quality(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, q_u): stored language + micro-quantized quality
     score per document — the scan-local assignment row. ``lang`` is the
@@ -80,13 +77,12 @@ def _doc_quality(docs: DataFrame) -> DataFrame:
     )
 
 
-def build_quality_state(docs: DataFrame, checkpoint: bool = True) -> QualityState:
+def build_quality_state(docs: DataFrame) -> QualityState:
     """Full build of the quality state from a (doc_id, lang, text)
     corpus."""
-    assign = _ckpt(_doc_quality(docs), checkpoint)
-    hist = _ckpt(
-        assign.groupBy("lang", "q_u").agg(F.count(F.lit(1)).alias("cnt")),
-        checkpoint,
+    assign = FEED.ckpt(_doc_quality(docs))
+    hist = FEED.ckpt(
+        assign.groupBy("lang", "q_u").agg(F.count(F.lit(1)).alias("cnt"))
     )
     return QualityState(assign, hist)
 
@@ -95,7 +91,6 @@ def apply_quality_changes(
     state: QualityState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> QualityState:
     """One maintenance round: decrement the OLD (lang, q_u) cells of
     every changed doc, increment the new assignments, drop empty cells.
@@ -118,7 +113,7 @@ def apply_quality_changes(
     assign2 = state.assign.join(
         F.broadcast(changed), "doc_id", "left_anti"
     ).unionByName(new)
-    return QualityState(_ckpt(assign2, checkpoint), _ckpt(hist2, checkpoint))
+    return QualityState(FEED.ckpt(assign2), FEED.ckpt(hist2))
 
 
 def quality_gate_report(state: QualityState) -> DataFrame:

@@ -56,10 +56,7 @@ class SCD2State(NamedTuple):
         release_local_checkpoint(self.history)
 
 
-_ckpt = FEED.ckpt
-
-
-def build_scd2_state(changes: DataFrame, checkpoint: bool = True) -> SCD2State:
+def build_scd2_state(changes: DataFrame) -> SCD2State:
     """Full build from a (key_id, …, op, change_version) change feed —
     one key-partitioned window (operators.cdc.scd2_history). The
     watermark is the feed's max version (−1 for an empty feed, so any
@@ -67,13 +64,11 @@ def build_scd2_state(changes: DataFrame, checkpoint: bool = True) -> SCD2State:
     wm_row = changes.agg(F.max("change_version").alias("wm")).first()
     wm = wm_row["wm"] if wm_row["wm"] is not None else -1
     return SCD2State(
-        _ckpt(scd2_history(changes, ["key_id"]), checkpoint), wm
+        FEED.ckpt(scd2_history(changes, ["key_id"])), wm
     )
 
 
-def apply_scd2_batch(
-    state: SCD2State, batch: DataFrame, checkpoint: bool = True
-) -> SCD2State:
+def apply_scd2_batch(state: SCD2State, batch: DataFrame) -> SCD2State:
     """One maintenance round: cursor-filter the batch to versions above
     the watermark (replay/overlap safety), then merge with scd2_apply.
     Only scalar aggregates reach the driver (the new watermark); the
@@ -103,16 +98,7 @@ def apply_scd2_batch(
     if wm_row["wm"] is None:  # fully-replayed batch → no-op
         return state
     merged = scd2_apply(state.history, fresh, ["key_id"])
-    return SCD2State(_ckpt(merged, checkpoint), int(wm_row["wm"]))
-
-
-def read_scd2_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = 1
-) -> DataFrame:
-    """Streaming source over a parquet dimension-change feed."""
-    return FEED.read_feed(
-        spark, feed_dir, SCD2_CHANGE_SCHEMA, max_files_per_trigger
-    )
+    return SCD2State(FEED.ckpt(merged), int(wm_row["wm"]))
 
 
 def run_scd2_maintenance(

@@ -61,8 +61,6 @@ __all__ = [
     "run_search_maintenance",
 ]
 
-_ckpt = FEED.ckpt
-
 
 class SearchState(NamedTuple):
     """Materialized incremental BM25 index state."""
@@ -95,17 +93,16 @@ def _tokenize(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return postings, base.select("doc_id", "dl")
 
 
-def build_search_state(docs: DataFrame, checkpoint: bool = True) -> SearchState:
+def build_search_state(docs: DataFrame) -> SearchState:
     """Full index build from a (doc_id, text) corpus."""
     postings, lens = _tokenize(docs)
-    return SearchState(_ckpt(postings, checkpoint), _ckpt(lens, checkpoint))
+    return SearchState(FEED.ckpt(postings), FEED.ckpt(lens))
 
 
 def apply_search_changes(
     state: SearchState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> SearchState:
     """One maintenance round: every changed doc's postings and length
     row are removed, upserted docs re-tokenized and re-added. The
@@ -119,7 +116,7 @@ def apply_search_changes(
     docs2 = state.docs.join(
         F.broadcast(changed), "doc_id", "left_anti"
     ).unionByName(new_lens)
-    return SearchState(_ckpt(postings2, checkpoint), _ckpt(docs2, checkpoint))
+    return SearchState(FEED.ckpt(postings2), FEED.ckpt(docs2))
 
 
 def score_query(

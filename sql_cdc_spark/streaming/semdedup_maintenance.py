@@ -59,49 +59,39 @@ class SemDedupState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
-def build_semdedup_state(
-    vectors: DataFrame, checkpoint: bool = True
-) -> SemDedupState:
+def build_semdedup_state(vectors: DataFrame) -> SemDedupState:
     """Full build from a (vec_id, embedding) corpus."""
-    vb = _ckpt(bucket_vectors(vectors), checkpoint)
-    return SemDedupState(vb, _ckpt(elect_dropped_arrow(vb), checkpoint))
+    vb = FEED.ckpt(bucket_vectors(vectors))
+    return SemDedupState(vb, FEED.ckpt(elect_dropped_arrow(vb)))
 
 
 def apply_semdedup_changes(
     state: SemDedupState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> SemDedupState:
     """One maintenance round: re-elect exactly the buckets the batch's
     vectors leave or enter; every other bucket's rows carry over."""
     changed = upserts.select("vec_id").unionByName(deletes).distinct()
     cb = F.broadcast(changed)
     new_vb = bucket_vectors(upserts)
-    aff = _ckpt(
+    aff = FEED.ckpt(
         state.vb.join(cb, "vec_id", "left_semi")
         .select("bucket")
         .unionByName(new_vb.select("bucket"))
-        .distinct(),
-        checkpoint,
+        .distinct()
     )
     ab = F.broadcast(aff)
-    vb2 = _ckpt(
-        state.vb.join(cb, "vec_id", "left_anti").unionByName(new_vb),
-        checkpoint,
+    vb2 = FEED.ckpt(
+        state.vb.join(cb, "vec_id", "left_anti").unionByName(new_vb)
     )
     re_elected = elect_dropped_arrow(vb2.join(ab, "bucket", "left_semi"))
-    dropped2 = _ckpt(
+    dropped2 = FEED.ckpt(
         state.dropped.join(ab, "bucket", "left_anti")
         .select(*state.dropped.columns)
-        .unionByName(re_elected.select(*state.dropped.columns)),
-        checkpoint,
+        .unionByName(re_elected.select(*state.dropped.columns))
     )
-    if checkpoint:
-        release_local_checkpoint(aff)
+    release_local_checkpoint(aff)
     return SemDedupState(vb2, dropped2)
 
 

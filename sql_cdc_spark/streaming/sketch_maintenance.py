@@ -28,27 +28,16 @@ from sql_cdc_spark.streaming import feed as FEED
 EVENT_SCHEMA = "group_key string, value long, change_version long"
 
 
-def read_event_feed(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet append-only event feed."""
-    return FEED.read_feed(spark, feed_dir, EVENT_SCHEMA, max_files_per_trigger)
-
-
 def apply_sketch_batch(
     state: DataFrame,
     batch_df: DataFrame,
     group_cols: list[str],
     value_col: str,
     p: int = HLL_P,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """One maintenance round: sketch the batch, merge into the state."""
     batch_regs = hll_registers(batch_df, group_cols, value_col, p)
-    out = merge_registers(state, batch_regs, group_cols=group_cols)
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return FEED.ckpt(merge_registers(state, batch_regs, group_cols=group_cols))
 
 
 def run_sketch_maintenance(

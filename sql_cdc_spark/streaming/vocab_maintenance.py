@@ -55,9 +55,6 @@ class VocabState(NamedTuple):
             release_local_checkpoint(f)
 
 
-_ckpt = FEED.ckpt
-
-
 def _doc_words(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, word) pairs — one row per word per document."""
     return docs.select(
@@ -65,15 +62,11 @@ def _doc_words(docs: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def build_vocab_state(
-    docs: DataFrame, checkpoint: bool = True
-) -> VocabState:
+def build_vocab_state(docs: DataFrame) -> VocabState:
     """Full build of the vocabulary state from a (doc_id, text) corpus."""
-    doc_ids = _ckpt(docs.select("doc_id").distinct(), checkpoint)
-    postings = _ckpt(_doc_words(docs), checkpoint)
-    df = _ckpt(
-        postings.groupBy("word").agg(F.count(F.lit(1)).alias("df")), checkpoint
-    )
+    doc_ids = FEED.ckpt(docs.select("doc_id").distinct())
+    postings = FEED.ckpt(_doc_words(docs))
+    df = FEED.ckpt(postings.groupBy("word").agg(F.count(F.lit(1)).alias("df")))
     return VocabState(doc_ids, postings, df)
 
 
@@ -81,7 +74,6 @@ def apply_vocab_changes(
     state: VocabState,
     upserts: DataFrame,
     deletes: DataFrame,
-    checkpoint: bool = True,
 ) -> VocabState:
     """One maintenance round.
 
@@ -112,9 +104,9 @@ def apply_vocab_changes(
         .unionByName(upserts.select("doc_id").distinct())
     )
     return VocabState(
-        _ckpt(doc_ids2, checkpoint),
-        _ckpt(postings2, checkpoint),
-        _ckpt(df2, checkpoint),
+        FEED.ckpt(doc_ids2),
+        FEED.ckpt(postings2),
+        FEED.ckpt(df2),
     )
 
 

@@ -213,57 +213,3 @@ def running_totals(events: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def running_totals_v2(events: DataFrame) -> DataFrame:
-    """The same per-key running (count, sum) as `running_totals`, on the
-    transformWithStateInPandas API (Spark 4's successor to
-    applyInPandasWithState): explicit StatefulProcessor lifecycle with
-    named ValueState backed by the RocksDB state store — the
-    arbitrary-state surface a 100 TB streaming deployment would use
-    (incremental checkpointing, state larger than executor memory).
-    Requires spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider on the session, and the python
-    `protobuf` package at runtime (Spark's TWS driver worker imports it
-    for state serialization; this container ships without it, so the e2e
-    test skips — the applyInPandasWithState twin above pins the exact
-    same semantics and runs everywhere)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "totals", "n LONG, total DOUBLE, batches LONG"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            n, total, batches = (
-                self._state.get() if self._state.exists() else (0, 0.0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            batches += 1
-            self._state.update((n, total, batches))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 6)],
-                    "batches_seen": [batches],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=RUNNING_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -73,10 +73,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() queries match the
-    DuckDB oracle's pre-registered view names."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

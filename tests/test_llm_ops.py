@@ -35,6 +35,21 @@ def test_exact_dedup_finds_planted_copies(spark, docs):
         assert d.canonical_id < off
 
 
+def doc_shingles_exact(docs, text_col: str = "text", id_col: str = "doc_id"):
+    """(doc_id, sh64) exploded-distinct, pure JVM expressions — the
+    cross-implementation REFERENCE for DD.doc_shingles (the elected
+    Arrow kernel must stay bit-identical to this). The shingle string is
+    hashed to its 60-bit md5-prefix int before the distinct, the same
+    hashed domain the DuckDB oracle dedups on."""
+    sh64 = F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("long")
+    return (
+        DD.balance_partitions(docs)
+        .select(F.col(id_col), F.explode(DD.shingles(F.col(text_col))).alias("shingle"))
+        .select(F.col(id_col), sh64.alias("sh64"))
+        .distinct()
+    )
+
+
 def test_doc_shingles_kernel_matches_exact(spark, docs):
     """r9 optimization: the elected mapInArrow shingling kernel must be
     bit-identical to the JVM expression reference (doc_shingles_exact)
@@ -61,7 +76,7 @@ def test_doc_shingles_kernel_matches_exact(spark, docs):
     )
     corpus = docs.select("doc_id", "text").unionByName(edges)
     got = sorted(map(tuple, DD.doc_shingles(corpus).collect()))
-    want = sorted(map(tuple, DD.doc_shingles_exact(corpus).collect()))
+    want = sorted(map(tuple, doc_shingles_exact(corpus).collect()))
     assert got == want
 
 

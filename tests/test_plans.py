@@ -51,13 +51,14 @@ _PANDAS_OK = {
     "sim_semantic_dedup",
     "sim_semdedup_sweep",
     # r9 (optimization round): doc_shingles is an elected mapInArrow
-    # kernel — bit-identical to doc_shingles_exact by test, 3.8× on the
-    # 10× scan, and the in-kernel per-doc dedup deletes the distinct
-    # exchange. These are the registry consumers whose final plans carry
-    # the MapInArrow node (the checkpoint-cut consumers — dup_clusters
-    # family, crp_manifest, incremental twins — consume it during
-    # construction, so their lineage-cut plans don't show it); presence
-    # is asserted by test_shingle_consumers_elect_arrow_kernel
+    # kernel — bit-identical to tests/test_llm_ops.py::doc_shingles_exact
+    # by test, 3.8× on the 10× scan, and the in-kernel per-doc dedup
+    # deletes the distinct exchange. These are the registry consumers
+    # whose final plans carry the MapInArrow node (the checkpoint-cut
+    # consumers — dup_clusters family, crp_manifest, incremental twins —
+    # consume it during construction, so their lineage-cut plans don't
+    # show it); presence is asserted by
+    # test_shingle_consumers_elect_arrow_kernel
     "crp_fuzzy_contamination",
     "dd_containment_pairs",
     "dd_containment_sweep",
@@ -86,9 +87,9 @@ def test_ann_recall_exact_side_elects_probe_kernel(spark):
 
 def test_shingle_consumers_elect_arrow_kernel(spark):
     """r9 optimization done-criterion: the shingle consumers must PLAN
-    the mapInArrow shingling kernel (the JVM expression path stays
-    available as doc_shingles_exact, the cross-implementation
-    reference)."""
+    the mapInArrow shingling kernel (the JVM expression path is the
+    cross-implementation reference tests/test_llm_ops.py::
+    doc_shingles_exact)."""
     for name in (
         "dd_near_dup_pairs",
         "dd_jaccard_pairs",

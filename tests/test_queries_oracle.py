@@ -54,6 +54,14 @@ def _tiered(names):
     ]
 
 
+def test_core_oracle_names_are_registered_oracles():
+    """A renamed or de-oracled query must not silently drop out of the
+    core tier."""
+    assert CORE_ORACLE <= set(ORACLE_CASES), sorted(
+        CORE_ORACLE - set(ORACLE_CASES)
+    )
+
+
 @pytest.mark.parametrize("name", _tiered(ORACLE_CASES))
 def test_query_matches_oracle(spark, oracle, name):
     entry = REG[name]
@@ -377,6 +385,47 @@ def test_quality_gate_matches_oracle(spark, oracle):
         assert r.median_micro == medians[r.lang]
         assert 2 * r.n_kept >= r.n_docs
         assert r.n_kept <= r.n_docs
+
+
+def test_quality_score_rounds_like_duckdb_at_decimal_ties(spark):
+    """Texts whose unrounded score prints as an exact 7th-decimal tie
+    (0.5123125, 0.5186875) while the binary double sits just below it.
+    DuckDB's ROUND(x, 6) keeps the binary value and rounds down; a
+    HALF_UP round of the decimal string would round up."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from sql_cdc_spark.functions import text as TX
+    from sql_cdc_spark.queries.text_q import _QUALITY_EXPR_SQL
+
+    texts = [
+        # 48 tokens, 417 chars, one " the ": unrounded 0.5123125
+        "the " + " ".join(["x" * 8] * 38 + ["x" * 7] * 9),
+        # 16 tokens, 129 chars, two " the ": unrounded 0.5186875
+        "the " + "x" * 8 + " the " + " ".join(["x" * 8] * 9 + ["x" * 7] * 4),
+    ]
+    rows = list(enumerate(texts))
+    got = [
+        r.quality
+        for r in spark.createDataFrame(rows, "doc_id long, text string")
+        .select("doc_id", TX.quality_score(F.col("text")).alias("quality"))
+        .orderBy("doc_id")
+        .collect()
+    ]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        want = [
+            q
+            for (q,) in con.execute(
+                f"SELECT {_QUALITY_EXPR_SQL} FROM documents ORDER BY doc_id"
+            ).fetchall()
+        ]
+    finally:
+        con.close()
+    assert want == [0.512312, 0.518687]
+    assert got == want
 
 
 def test_ngram_lm_score_matches_oracle(spark, oracle):

@@ -22,3 +22,50 @@ def test_cdc_operator_chain(spark):
     assert 0 < len(rows) <= 50
     versions = [r.change_version for r in rows]
     assert versions == sorted(versions)
+
+
+def test_caller_java_options_keep_the_locale_pin(tmp_path):
+    """A caller's extraJavaOptions reach the JVM alongside the en_US
+    locale pin instead of replacing it. Runs in a fresh process: the
+    options only apply when the JVM launches."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import json
+from sql_cdc_spark.session import get_spark
+opts = "-Dsql_cdc_spark.probe=42"
+spark = get_spark("locale-pin", master="local[1]", extra_conf={
+    "spark.driver.extraJavaOptions": opts,
+    "spark.executor.extraJavaOptions": opts,
+})
+jvm = spark._jvm
+print(json.dumps({
+    "probe": jvm.java.lang.System.getProperty("sql_cdc_spark.probe"),
+    "lang": jvm.java.util.Locale.getDefault().getLanguage(),
+    "country": jvm.java.util.Locale.getDefault().getCountry(),
+    "executor": spark.sparkContext.getConf().get(
+        "spark.executor.extraJavaOptions"),
+}))
+spark.stop()
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PYTHONPATH=repo,
+        SPARK_GRAFT_DRIVER_MEM="512m",
+        # a stray locale default must not survive the pin
+        JAVA_TOOL_OPTIONS="-Duser.language=tr -Duser.country=TR",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got["probe"] == "42"
+    assert (got["lang"], got["country"]) == ("en", "US")
+    assert "-Dsql_cdc_spark.probe=42" in got["executor"]
+    assert "-Duser.language=en" in got["executor"]

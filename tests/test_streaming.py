@@ -1386,7 +1386,7 @@ def test_streaming_vocab_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(b1.select("doc_id", "text"))
     )
-    want = VM.build_vocab_state(final_corpus, checkpoint=False)
+    want = VM.build_vocab_state(final_corpus)
     got_df = {(r.word, r.df) for r in final.df.collect()}
     want_df = {(r.word, r.df) for r in want.df.collect()}
     assert got_df == want_df
@@ -1405,7 +1405,7 @@ def test_streaming_vocab_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(upd_v2).unionByName(upd_v3)
     ups2, dels2 = VM.collapse_batch(b2)
-    replay = VM.apply_vocab_changes(final, ups2, dels2, checkpoint=False)
+    replay = VM.apply_vocab_changes(final, ups2, dels2)
     assert {(r.word, r.df) for r in replay.df.collect()} == got_df
 
 
@@ -1456,14 +1456,14 @@ def test_streaming_scd2_maintenance_equals_full_recompute(spark, tmp_path):
 
     # replayed batch: versions all <= watermark → the SAME state comes back
     replay = SM.apply_scd2_batch(
-        final, full.filter(F.col("change_version") == 6), checkpoint=False
+        final, full.filter(F.col("change_version") == 6)
     )
     assert replay is final
 
     # cold start: an empty initial state merges the whole feed in one round
-    empty = SM.build_scd2_state(full.filter(F.lit(False)), checkpoint=False)
+    empty = SM.build_scd2_state(full.filter(F.lit(False)))
     assert empty.watermark == -1
-    cold = SM.apply_scd2_batch(empty, full, checkpoint=False)
+    cold = SM.apply_scd2_batch(empty, full)
     got_cold = sorted(tuple(r) for r in cold.history.select(*cols).collect())
     assert got_cold == want
     final.release()
@@ -1526,7 +1526,7 @@ def test_streaming_chunk_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(ins.select("doc_id", "text"))
     )
-    want = CM.build_chunk_state(final_corpus, checkpoint=False)
+    want = CM.build_chunk_state(final_corpus)
     key = lambda r: (r.doc_id, r.chunk_index, r.chunk_start, r.chunk_len, r.chunk_digest)
     got = sorted(map(key, final.chunks.collect()))
     assert got == sorted(map(key, want.chunks.collect()))
@@ -1540,7 +1540,7 @@ def test_streaming_chunk_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(upd_v2).unionByName(upd_v3)
     ups2, dels2 = CM.collapse_batch(b2)
-    replay = CM.apply_chunk_changes(final, ups2, dels2, checkpoint=False)
+    replay = CM.apply_chunk_changes(final, ups2, dels2)
     assert sorted(map(key, replay.chunks.collect())) == got
 
 
@@ -1632,7 +1632,7 @@ def test_incremental_rag_index_end_to_end(spark, tmp_path):
         .unionByName(upd.select("doc_id", "text"))
         .unionByName(ins.select("doc_id", "text"))
     )
-    want_chunks = CM.build_chunk_state(final_corpus, checkpoint=False)
+    want_chunks = CM.build_chunk_state(final_corpus)
     want = AM.assign_under_model(model, _digest_embedding(want_chunks.chunks))
     got = {(r.vec_id, r.cluster) for r in maintained.collect()}
     assert got == {(r.vec_id, r.cluster) for r in want.collect()}
@@ -1727,7 +1727,7 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
         .limit(120)
     )
     search0 = SM.build_search_state(base)
-    vec0 = FEED.ckpt(_doc_vec(base), True)
+    vec0 = FEED.ckpt(_doc_vec(base))
 
     feed_dir = str(tmp_path / "feed")
     ins = base.orderBy("doc_id").limit(4).select(
@@ -1773,7 +1773,7 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
         )
         kept = prev.join(F.broadcast(changed), "vec_id", "left_anti")
         return FEED.ckpt(
-            kept.unionByName(_doc_vec(ups.select("doc_id", "text"))), True
+            kept.unionByName(_doc_vec(ups.select("doc_id", "text")))
         )
 
     vec_final, vn = FEED.drain_feed(
@@ -2661,7 +2661,7 @@ def test_streaming_search_maintenance_equals_batch_bm25(spark, tmp_path):
         "doc_id", "lang", "source", "text"
     )
     st0 = SM.build_search_state(
-        corpus.select("doc_id", "text"), checkpoint=False
+        corpus.select("doc_id", "text")
     )
     got0 = [
         tuple(r)
@@ -2723,7 +2723,7 @@ def test_streaming_search_maintenance_equals_batch_bm25(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(b1.select("doc_id", "text"))
     )
-    rebuilt = SM.build_search_state(final_corpus, checkpoint=False)
+    rebuilt = SM.build_search_state(final_corpus)
     got_post = {tuple(r) for r in final.postings.collect()}
     want_post = {tuple(r) for r in rebuilt.postings.collect()}
     assert got_post == want_post
@@ -2855,7 +2855,7 @@ def test_streaming_quality_maintenance_equals_full_recompute(spark, tmp_path):
     corpus = tables.load(spark, SF_DIR_SMALL, "documents").select(
         "doc_id", "lang", "source", "text"
     )
-    state0 = QM.build_quality_state(corpus, checkpoint=False)
+    state0 = QM.build_quality_state(corpus)
     got0 = [tuple(r) for r in QM.quality_gate_report(state0).collect()]
     want0 = [tuple(r) for r in txt_quality_gate(spark, SF_DIR_SMALL).collect()]
     assert got0 == want0 and got0
@@ -2908,7 +2908,7 @@ def test_streaming_quality_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(b1.select("doc_id", "lang", "source", "text"))
     )
-    want = QM.build_quality_state(final_corpus, checkpoint=False)
+    want = QM.build_quality_state(final_corpus)
     got_hist = {(r.lang, r.q_u, r.cnt) for r in final.hist.collect()}
     want_hist = {(r.lang, r.q_u, r.cnt) for r in want.hist.collect()}
     assert got_hist == want_hist
@@ -2934,7 +2934,7 @@ def test_streaming_quality_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(upd_v2).unionByName(upd_v3)
     ups2, dels2 = QM.collapse_batch(b2)
-    replay = QM.apply_quality_changes(final, ups2, dels2, checkpoint=False)
+    replay = QM.apply_quality_changes(final, ups2, dels2)
     assert {(r.lang, r.q_u, r.cnt) for r in replay.hist.collect()} == got_hist
 
 
@@ -2956,7 +2956,7 @@ def test_streaming_lm_maintenance_equals_full_recompute(spark, tmp_path):
     corpus = tables.load(spark, SF_DIR_SMALL, "documents").select(
         "doc_id", "text"
     )
-    state0 = LM.build_lm_state(corpus, checkpoint=False)
+    state0 = LM.build_lm_state(corpus)
     test_docs = corpus.filter(
         SP.hash_unit(F.col("doc_id"), "split") < TEST_FRAC
     )
@@ -3011,7 +3011,7 @@ def test_streaming_lm_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(b1.select("doc_id", "text"))
     )
-    want = LM.build_lm_state(final_corpus, checkpoint=False)
+    want = LM.build_lm_state(final_corpus)
     got_lm = {(r.sh64, r.cnt) for r in final.lm.collect()}
     want_lm = {(r.sh64, r.cnt) for r in want.lm.collect()}
     assert got_lm == want_lm
@@ -3035,7 +3035,7 @@ def test_streaming_lm_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(upd_v2).unionByName(upd_v3)
     ups2, dels2 = LM.collapse_batch(b2)
-    replay = LM.apply_lm_changes(final, ups2, dels2, checkpoint=False)
+    replay = LM.apply_lm_changes(final, ups2, dels2)
     assert {(r.sh64, r.cnt) for r in replay.lm.collect()} == got_lm
 
 
@@ -3087,9 +3087,9 @@ def test_scd2_intra_batch_redelivery_is_noop(spark):
     dup = clean + [(1, 11, "U", 3), (2, 21, "U", 4)]  # intra-batch replay
 
     def _hist(batch_rows):
-        st = S2.build_scd2_state(base, checkpoint=False)
+        st = S2.build_scd2_state(base)
         batch = spark.createDataFrame(batch_rows, S2.SCD2_CHANGE_SCHEMA)
-        nxt = S2.apply_scd2_batch(st, batch, checkpoint=False)
+        nxt = S2.apply_scd2_batch(st, batch)
         cols = sorted(nxt.history.columns)
         return sorted(tuple(r[c] for c in cols) for r in nxt.history.collect())
 
@@ -3113,7 +3113,7 @@ def test_streaming_dsir_maintenance_equals_full_recompute(spark, tmp_path):
     corpus = tables.load(spark, SF_DIR_SMALL, "documents").select(
         "doc_id", "text"
     )
-    state0 = DM.build_dsir_state(corpus, checkpoint=False)
+    state0 = DM.build_dsir_state(corpus)
     got0 = [tuple(r) for r in DM.select_top(state0).collect()]
     want0 = [tuple(r) for r in crp_dsir_select(spark, SF_DIR_SMALL).collect()]
     assert got0 == want0 and got0
@@ -3167,7 +3167,7 @@ def test_streaming_dsir_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(spark.createDataFrame([(flip_id, "zz")], "doc_id long, text string"))
         .unionByName(b1.select("doc_id", "text"))
     )
-    want = DM.build_dsir_state(final_corpus, checkpoint=False)
+    want = DM.build_dsir_state(final_corpus)
     for got_df, want_df, cols in (
         (final.raw, want.raw, ("sh64", "raw_cnt")),
         (final.tgt, want.tgt, ("sh64", "tgt_cnt")),
@@ -3183,7 +3183,7 @@ def test_streaming_dsir_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(flip)
     ups2, dels2 = DM.collapse_batch(b2)
-    replay = DM.apply_dsir_changes(final, ups2, dels2, checkpoint=False)
+    replay = DM.apply_dsir_changes(final, ups2, dels2)
     got_raw = {(r.sh64, r.raw_cnt) for r in replay.raw.collect()}
     assert got_raw == {(r.sh64, r.raw_cnt) for r in final.raw.collect()}
 
@@ -3243,7 +3243,7 @@ def test_streaming_semdedup_maintenance_equals_full_recompute(spark, tmp_path):
         )
         .unionByName(clones.select("vec_id", "embedding"))
     )
-    want = SD.build_semdedup_state(final_corpus, checkpoint=False)
+    want = SD.build_semdedup_state(final_corpus)
 
     def _drops(st):
         return {
@@ -3265,7 +3265,7 @@ def test_streaming_semdedup_maintenance_equals_full_recompute(spark, tmp_path):
 
     # idempotent replay of batch 2
     ups2, dels2 = SD.collapse_batch(b2)
-    replay = SD.apply_semdedup_changes(final, ups2, dels2, checkpoint=False)
+    replay = SD.apply_semdedup_changes(final, ups2, dels2)
     assert _drops(replay) == got
 
 
@@ -3362,7 +3362,7 @@ def test_streaming_passage_maintenance_equals_full_recompute(spark, tmp_path):
         .unionByName(win_upd)
         .unionByName(b1.select("doc_id", "source", "text"))
     )
-    want_state = PM.build_passage_state(final_corpus, checkpoint=False)
+    want_state = PM.build_passage_state(final_corpus)
     got = [tuple(r) for r in PM.dup_passage_census(final).collect()]
     want = [tuple(r) for r in PM.dup_passage_census(want_state).collect()]
     assert got == want
@@ -3373,7 +3373,7 @@ def test_streaming_passage_maintenance_equals_full_recompute(spark, tmp_path):
     # idempotent replay of batch 2
     b2 = dels.unionByName(upd_v2).unionByName(upd_v3)
     ups2, dels2 = PM.collapse_batch(b2)
-    replay = PM.apply_passage_changes(final, ups2, dels2, checkpoint=False)
+    replay = PM.apply_passage_changes(final, ups2, dels2)
     assert [
         tuple(r) for r in PM.dup_passage_census(replay).collect()
     ] == got
@@ -3450,7 +3450,7 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
         )
         .unionByName(clones.select("vec_id", "embedding"))
     )
-    want = KM.build_knn_state(final_corpus, checkpoint=False)
+    want = KM.build_knn_state(final_corpus)
 
     def rows_of(st):
         return {
@@ -3476,7 +3476,7 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
 
     # idempotent replay of batch 2
     ups2, dels2 = KM.collapse_batch(b2)
-    replay = KM.apply_knn_changes(final, ups2, dels2, checkpoint=False)
+    replay = KM.apply_knn_changes(final, ups2, dels2)
     assert rows_of(replay) == got
 
 

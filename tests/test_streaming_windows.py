@@ -182,56 +182,6 @@ def test_session_windows_stream_closes_sessions(spark, event_stream_dir, tmp_pat
         assert got.get(key) == val, f"closed session {key} missing or differs"
 
 
-def test_running_totals_v2_transform_with_state(spark, event_stream_dir, tmp_path):
-    """transformWithStateInPandas twin of running_totals: same state
-    carry across micro-batches, same final totals as the batch groupBy,
-    on the RocksDB-backed arbitrary-state API. Spark's TWS driver worker
-    imports protobuf for state serialization — absent from this
-    container (no pip install allowed), so the e2e run only executes
-    where protobuf exists; construction is still exercised below."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas worker needs protobuf (not in container)",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src, ev = event_stream_dir
-        stream = W.read_event_stream(spark, src, max_files_per_trigger=1)
-        q = (
-            W.running_totals_v2(stream)
-            .writeStream.format("memory")
-            .queryName("running_v2")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "chk_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        emits = spark.table("running_v2").collect()
-        assert [r for r in emits if r.batches_seen == 2], "no cross-batch state carry"
-        final = {}
-        for r in emits:
-            prev = final.get(r.user_id)
-            if prev is None or r.batches_seen > prev.batches_seen:
-                final[r.user_id] = r
-        want = {
-            r.user_id: (r.n, round(r.s, 6))
-            for r in ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-            .collect()
-        }
-        got = {u: (r.n_events, r.total_value) for u, r in final.items()}
-        assert got.keys() == want.keys()
-        for u in want:
-            assert got[u][0] == want[u][0]
-            assert got[u][1] == pytest.approx(want[u][1], abs=1e-4)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_interval_join_stream_matches_batch(spark, tmp_path):
     """Stream-stream interval join (inner, both sides watermarked): the
     emitted pairs equal the batch join with the identical expr tree —
@@ -317,13 +267,3 @@ def test_interval_join_left_outer_semantics(spark, tmp_path):
     assert got_nulls <= want_nulls
     assert got_nulls.isdisjoint({l for l, _ in got_matched})
 
-
-def test_running_totals_v2_constructs_unbound(spark, event_stream_dir):
-    """The TWS operator must at least build its plan (processor wiring,
-    state schema, output schema) even where the protobuf-dependent
-    runtime can't execute — catches API drift without the e2e run."""
-    src, _ = event_stream_dir
-    stream = W.read_event_stream(spark, src)
-    df = W.running_totals_v2(stream)
-    assert df.isStreaming
-    assert set(df.columns) == {"user_id", "n_events", "total_value", "batches_seen"}
