@@ -1,17 +1,20 @@
 """SparkSession factory.
 
-Local test runs use local[$SPARK_GRAFT_CPUS]; on a real cluster the same
-configs apply per-executor. Everything here is sized so the same code
-scales from the sf0.01 correctness runs to a 1000-executor / 100 TB
-deployment: AQE handles runtime re-planning (partition coalescing, skew
-joins), shuffle partitions default to the parallelism of the local run but
-should be overridden (or left to AQE) on a cluster, and Arrow is enabled
-for the Pandas-UDF slow path.
+Local runs are sized from the host (``host_sizing``): every core this
+process may run on, and ~40% of physical memory as the driver heap, with
+$SPARK_GRAFT_CPUS / $SPARK_GRAFT_DRIVER_MEM as overrides. On a real
+cluster the same configs apply per-executor. Everything here is sized so
+the same code scales from the sf0.01 correctness runs to a 1000-executor /
+100 TB deployment: AQE handles runtime re-planning (partition coalescing,
+skew joins), shuffle partitions default to the parallelism of the local
+run but should be overridden (or left to AQE) on a cluster, and Arrow is
+enabled for the Pandas-UDF slow path.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
 
@@ -30,8 +33,35 @@ _JAVA_OPTS_KEYS = (
 )
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+def host_sizing(
+    env: Mapping[str, str], affinity: int, mem_total_kb: int
+) -> tuple[int, str, int]:
+    """(cores, driver heap, maxResultSize MB) for a local session on a
+    host with ``affinity`` usable cores and ``mem_total_kb`` of physical
+    memory (MemTotal). ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM``
+    in ``env`` override the host values.
+
+    The heap defaults to 40% of physical memory, so the OS can always
+    back it next to the Python workers. maxResultSize must stay well
+    under the heap, or a large legitimate broadcast build OOM-kills the
+    JVM instead of aborting with the clean maxResultSize error: heap/4,
+    floored at min(256 MB, heap/2) and capped at 4 GB — the floor itself
+    is heap-relative so even a tiny heap (e.g. 200m) can never be
+    assigned a limit at or above the heap (ADVICE r5: a flat 256 MB floor
+    broke the guarantee below ~1 GB)."""
+    cpus = int(env.get("SPARK_GRAFT_CPUS") or affinity)
+    host_heap_mb = mem_total_kb * 2 // 5 // 1024
+    driver_mem = env.get("SPARK_GRAFT_DRIVER_MEM") or f"{host_heap_mb}m"
+    m = driver_mem.lower()
+    try:
+        if m.endswith(("m", "mb")):
+            heap_mb = int(m.rstrip("mb"))
+        else:
+            heap_mb = int(m.rstrip("gb")) * 1024
+    except ValueError:
+        heap_mb = host_heap_mb
+    max_result_mb = min(4096, max(min(256, heap_mb // 2), heap_mb // 4))
+    return cpus, driver_mem, max_result_mb
 
 
 def get_spark(
@@ -48,26 +78,10 @@ def get_spark(
     so a task's input fits executor memory, UTC timestamps so results are
     reproducible across sites.
     """
-    cpus = default_parallelism()
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    # maxResultSize must stay well under the driver heap, or a large
-    # legitimate broadcast build OOM-kills the JVM instead of aborting
-    # with the clean maxResultSize error: heap/4, floored at
-    # min(256 MB, heap/2) and capped at 4 GB — the floor itself is
-    # heap-relative so even a tiny configured heap (e.g.
-    # SPARK_GRAFT_DRIVER_MEM=200m) can never be assigned a limit at or
-    # above the heap, which would reintroduce the
-    # OOM-instead-of-clean-abort failure this exists to prevent
-    # (ADVICE r5: a flat 256 MB floor broke the guarantee below ~1 GB)
-    try:
-        m = driver_mem.lower()
-        if m.endswith(("m", "mb")):
-            heap_mb = int(m.rstrip("mb"))
-        else:
-            heap_mb = int(m.rstrip("gb") or "48") * 1024
-    except ValueError:
-        heap_mb = 48 * 1024
-    max_result_mb = min(4096, max(min(256, heap_mb // 2), heap_mb // 4))
+    mem_total_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    cpus, driver_mem, max_result_mb = host_sizing(
+        os.environ, len(os.sched_getaffinity(0)), mem_total_kb
+    )
     # Python workers re-import this package when a UDF closure references
     # it (cloudpickle pickles module-level functions by reference), so the
     # package root must be on the workers' PYTHONPATH — the driver's
@@ -99,7 +113,7 @@ def get_spark(
         # default 1g here). Structurally-wrong broadcasts are fixed with
         # per-join hints (dedup._attach_sizes); this raises the ceiling
         # for the ones that are genuinely the right plan, capped by the
-        # configured driver heap (see max_result_gb above).
+        # configured driver heap (see host_sizing).
         .config("spark.driver.maxResultSize", f"{max_result_mb}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.schemaInference", "false")

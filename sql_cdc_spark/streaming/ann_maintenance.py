@@ -44,13 +44,6 @@ CHANGE_SCHEMA = (
 )
 
 
-def read_embedding_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet embedding-change feed."""
-    return FEED.read_feed(spark, feed_dir, CHANGE_SCHEMA, max_files_per_trigger)
-
-
 def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Latest-op-per-vector collapse of one change batch → (upserts,
     deletes) — streaming/feed.py::collapse_latest on (vec_id,
@@ -113,24 +106,15 @@ def run_ann_maintenance(
     checkpoint_dir: str,
     initial_postings: DataFrame,
     model,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[DataFrame, int]:
     """Drain the change feed with trigger(availableNow), applying each
     micro-batch to the posting table; returns (final_postings,
-    n_batches).
-
-    Ownership: ``initial_postings`` (and every intermediate snapshot) is
-    RELEASED as it is superseded — callers must not reuse the passed-in
-    frame after this returns. The returned postings are live and
-    caller-owned."""
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    n_batches). Ownership: as ``feed.drain_feed``."""
+    def _apply(prev: DataFrame, batch_df: DataFrame, batch_id: int) -> DataFrame:
         upserts, deletes = collapse_batch(batch_df)
         return apply_postings_changes(prev, upserts, deletes, model)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial_postings,
         _apply, release_local_checkpoint,
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

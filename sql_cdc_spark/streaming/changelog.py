@@ -145,17 +145,13 @@ def read_changelog_range(
     )
 
 
-def read_changelog_stream(spark: SparkSession, log_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming view (file source). maxFilesPerTrigger is the
-    backpressure bound — the reference's `limit` param analog (T8).
-    Missing dir = empty cold-start log, same as the batch view."""
+def read_changelog_stream(spark: SparkSession, log_dir: str) -> DataFrame:
+    """Streaming view (file source). Missing dir = empty cold-start log,
+    same as the batch view."""
     from sql_cdc_spark.streaming.fsutil import ensure_dir
 
     ensure_dir(spark, log_dir)
-    reader = spark.readStream.schema(CHANGELOG_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(log_dir)
+    return spark.readStream.schema(CHANGELOG_SCHEMA).parquet(log_dir)
 
 
 def current_version(spark: SparkSession, log_dir: str) -> int:

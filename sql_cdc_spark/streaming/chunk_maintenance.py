@@ -88,21 +88,16 @@ def run_chunk_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: ChunkState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[ChunkState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches).
-    ``initial`` and every superseded state are released; the returned
-    state is live and caller-owned."""
+    Ownership: as ``feed.drain_feed``."""
 
-    def _apply(prev: ChunkState, batch_df: DataFrame) -> ChunkState:
+    def _apply(prev: ChunkState, batch_df: DataFrame, batch_id: int) -> ChunkState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_chunk_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -53,17 +53,13 @@ def run_dedup_maintenance(
     *,
     max_bucket_size: int | None = None,
     threshold: float = 0.5,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[DD.NearDupState, int]:
     """Drain the change feed with trigger(availableNow) applying each
     micro-batch to the state; returns (final_state, n_batches).
-
-    Ownership: ``initial`` (and every intermediate state) is RELEASED as
-    it is superseded — callers must not reuse the passed-in state after
-    this returns. The returned state is live and caller-owned.
-    """
-    def _apply(prev: DD.NearDupState, batch_df: DataFrame) -> DD.NearDupState:
+    Ownership: as ``feed.drain_feed``."""
+    def _apply(
+        prev: DD.NearDupState, batch_df: DataFrame, batch_id: int
+    ) -> DD.NearDupState:
         upserts, deletes = collapse_batch(batch_df)
         return DD.apply_near_dup_changes(
             prev,
@@ -76,7 +72,6 @@ def run_dedup_maintenance(
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )
 
 
@@ -88,17 +83,16 @@ def run_containment_maintenance(
     *,
     df_cap: int = 20,
     threshold: float = 0.2,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[DD.ContainmentState, int]:
     """Containment twin of ``run_dedup_maintenance``: the same change
     feed maintains the rare-shingle containment state
     (functions/dedup.ContainmentState) per micro-batch through
     ``apply_containment_changes`` — including the global-rarity flips a
-    batch can cause for documents it never touched. Same ownership
-    contract: superseded states are released, the returned state is
-    live and caller-owned."""
-    def _apply(prev: DD.ContainmentState, batch_df: DataFrame) -> DD.ContainmentState:
+    batch can cause for documents it never touched.
+    Ownership: as ``feed.drain_feed``."""
+    def _apply(
+        prev: DD.ContainmentState, batch_df: DataFrame, batch_id: int
+    ) -> DD.ContainmentState:
         upserts, deletes = collapse_batch(batch_df)
         return DD.apply_containment_changes(
             prev, upserts, deletes, df_cap=df_cap, threshold=threshold
@@ -107,5 +101,4 @@ def run_containment_maintenance(
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -58,9 +58,6 @@ def run_streaming_expectations(
     checkpoint: str,
     rules: dict[str, Column],
     violations_dir: str,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[dict[str, int], int]:
     """Drain the feed with trigger(availableNow), checking every
     micro-batch against the rules; violations are parked per batch and
@@ -69,8 +66,7 @@ def run_streaming_expectations(
     path for that). Returns (total violations per rule across batches,
     n_batches)."""
     def _apply(state: dict, batch_df: DataFrame, batch_id: int) -> dict:
-        # the REAL foreachBatch id (third-parameter form of drain_feed's
-        # apply contract): checkpoint-persisted, so evidence directories
+        # the checkpoint-persisted foreachBatch id: evidence directories
         # stay stable across restart/replay and a resumed drain keeps
         # numbering instead of restarting at 0 and colliding
         for rule, n in check_batch(
@@ -82,7 +78,6 @@ def run_streaming_expectations(
     final, n_batches = FEED.drain_feed(
         spark, feed_dir, schema, checkpoint,
         {}, _apply, lambda s: None,
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )
     return final, n_batches
 

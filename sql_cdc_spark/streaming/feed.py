@@ -2,11 +2,13 @@
 (near-dup, ANN postings, HLL sketches, DF/IDF vocabulary, SCD2 history).
 
 Every maintenance module has the same skeleton: a schema'd parquet
-readStream over an append-only change-feed directory, a latest-op-per-key
-collapse of each micro-batch, and a foreachBatch availableNow drain that
-threads a state object through the batches, releasing each superseded
-snapshot. One implementation here means a drain-loop fix (timeout
-handling, release ordering) lands everywhere at once.
+readStream over an append-only change-feed directory, read one file per
+trigger, a latest-op-per-key collapse of each micro-batch, and a
+foreachBatch availableNow drain that threads a state object through the
+batches, releasing each superseded snapshot. The drain has one apply
+contract, ``apply_fn(prev, batch_df, batch_id) -> next``. One
+implementation here means a drain-loop fix (timeout handling, release
+ordering) lands everywhere at once.
 """
 
 from __future__ import annotations
@@ -23,18 +25,14 @@ def ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def read_feed(
-    spark: SparkSession,
-    feed_dir: str,
-    schema,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming source over a parquet change-feed directory. ``schema``
-    is a DDL string or StructType; files written BEFORE a column was
-    added to the feed simply read it as null (parquet by-name column
-    resolution), which is the engine's schema-evolution contract — see
-    ``discover_feed_schema`` for deriving the evolved schema from the
-    directory instead of hardcoding it.
+def read_feed(spark: SparkSession, feed_dir: str, schema) -> DataFrame:
+    """Streaming source over a parquet change-feed directory, one file
+    per micro-batch. ``schema`` is a DDL string or StructType; files
+    written BEFORE a column was added to the feed simply read it as null
+    (parquet by-name column resolution), which is the engine's
+    schema-evolution contract — see ``discover_feed_schema`` for
+    deriving the evolved schema from the directory instead of hardcoding
+    it.
 
     Cold start: a maintenance job legitimately comes up before its feed
     has produced a single file, so a missing directory is created empty
@@ -45,10 +43,11 @@ def read_feed(
     from sql_cdc_spark.streaming.fsutil import ensure_dir
 
     ensure_dir(spark, feed_dir)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return reader.parquet(feed_dir)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed_dir)
+    )
 
 
 def discover_feed_schema(spark: SparkSession, feed_dir: str, required: str):
@@ -136,57 +135,35 @@ def drain_feed(
     apply_fn: Callable,
     release_fn: Callable,
     *,
-    max_files_per_trigger: int | None = 1,
     timeout_s: int = 300,
 ):
     """Drain the change feed with trigger(availableNow), threading the
-    state through ``apply_fn(prev_state, batch_df) -> next_state`` per
-    micro-batch; returns (final_state, n_batches). A drain that does not
-    terminate within ``timeout_s`` is STOPPED and raises TimeoutError —
-    never a silent partial state with a live stream still mutating it;
-    the checkpoint resumes the drain on the next call.
+    state through ``apply_fn(prev_state, batch_df, batch_id) ->
+    next_state`` per micro-batch; returns (final_state, n_batches).
+    ``batch_id`` is the foreachBatch id the checkpoint persists, so it
+    is stable across restart/replay and keeps numbering across a resumed
+    drain. A drain that does not terminate within ``timeout_s`` is
+    STOPPED and raises TimeoutError — never a silent partial state with
+    a live stream still mutating it; the checkpoint resumes the drain on
+    the next call.
 
     Ownership: each superseded state is released via ``release_fn`` the
     moment its successor exists — callers must not reuse the passed-in
     state after this returns; the returned state is live and
     caller-owned. An apply that returns the SAME object (a no-op batch,
-    e.g. fully replayed under a watermark cursor) releases nothing.
-
-    An ``apply_fn`` declaring a THIRD parameter also receives the real
-    foreachBatch batch id — the one the checkpoint persists, so it is
-    stable across restart/replay and keeps numbering across a resumed
-    drain (a caller-side counter would restart at 0 and collide)."""
-    import inspect
-
-    # Only REQUIRED positional params count toward the 3-arg form: a
-    # defaulted or keyword-only third param (config flags, loggers) must
-    # not silently receive the batch id.
-    wants_id = (
-        sum(
-            1
-            for p in inspect.signature(apply_fn).parameters.values()
-            if p.kind
-            in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD, p.VAR_POSITIONAL)
-            and p.default is p.empty
-        )
-        >= 3
-    )
+    e.g. fully replayed under a watermark cursor) releases nothing."""
     holder: dict = {"state": initial, "batches": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         prev = holder["state"]
-        nxt = (
-            apply_fn(prev, batch_df, int(batch_id))
-            if wants_id
-            else apply_fn(prev, batch_df)
-        )
+        nxt = apply_fn(prev, batch_df, int(batch_id))
         if nxt is not prev:
             release_fn(prev)
         holder["state"] = nxt
         holder["batches"] += 1
 
     query = (
-        read_feed(spark, feed_dir, schema, max_files_per_trigger)
+        read_feed(spark, feed_dir, schema)
         .writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

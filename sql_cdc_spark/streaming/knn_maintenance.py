@@ -120,19 +120,15 @@ def run_knn_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: KnnState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[KnnState, int]:
     """Drain the embedding change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
 
-    def _apply(prev: KnnState, batch_df: DataFrame) -> KnnState:
+    def _apply(prev: KnnState, batch_df: DataFrame, batch_id: int) -> KnnState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_knn_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

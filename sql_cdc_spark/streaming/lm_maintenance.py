@@ -159,18 +159,14 @@ def run_lm_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: LMState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[LMState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: LMState, batch_df: DataFrame) -> LMState:
+    def _apply(prev: LMState, batch_df: DataFrame, batch_id: int) -> LMState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_lm_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

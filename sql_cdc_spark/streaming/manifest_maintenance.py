@@ -249,16 +249,14 @@ def run_manifest_maintenance(
     min_quality: float = 0.5,
     near_dup_threshold: float = 0.5,
     lsh_max_bucket: int = 50,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[ManifestState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch to the manifest state; returns
-    (final_state, n_batches). Same ownership contract as
-    run_dedup_maintenance: superseded states are released, the returned
-    state is live and caller-owned."""
+    (final_state, n_batches). Ownership: as ``feed.drain_feed``."""
 
-    def _apply(prev: ManifestState, batch_df: DataFrame) -> ManifestState:
+    def _apply(
+        prev: ManifestState, batch_df: DataFrame, batch_id: int
+    ) -> ManifestState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_manifest_changes(
             prev,
@@ -278,6 +276,4 @@ def run_manifest_maintenance(
         initial,
         _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger,
-        timeout_s=timeout_s,
     )

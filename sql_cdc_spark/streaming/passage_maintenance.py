@@ -143,21 +143,16 @@ def run_passage_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: PassageState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[PassageState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches).
-    ``initial`` and every superseded state are released; the returned
-    state is live and caller-owned."""
+    Ownership: as ``feed.drain_feed``."""
 
-    def _apply(prev: PassageState, batch_df: DataFrame) -> PassageState:
+    def _apply(prev: PassageState, batch_df: DataFrame, batch_id: int) -> PassageState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_passage_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
         _apply, lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

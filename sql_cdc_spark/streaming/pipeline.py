@@ -261,7 +261,6 @@ def pull_batch(
     model: InvoiceModel,
     out_dir: str,
     limit: int = 1000,
-    fail_sink: bool = False,
     error_dir: str | None = None,
 ) -> BatchResult:
     """One checkpointed incremental pull (invoice-api/server.js:83-365):
@@ -275,7 +274,8 @@ def pull_batch(
     7. assemble + write documents (idempotent names)   server.js:183-203
     8. advance cursor only if sink succeeded           server.js:231-249
 
-    ``fail_sink`` injects a sink failure (for resume tests).
+    The bounded batch is cached, and unpersisted on every way out, a sink
+    or cursor failure included.
 
     ``log_dir`` is a parquet log directory, OR a ready changelog
     DataFrame in the same (table_name, key_id, change_version, op, …)
@@ -339,34 +339,32 @@ def pull_batch(
     # so its deleted keys never enter the batch; advancing past them here
     # is the equivalent no-starvation guarantee.)
     batch = batch.cache()
-    batch_rows = batch.select("invoice_id", "change_version").orderBy(
-        "change_version", "invoice_id"
-    ).collect()
-    stage_ms["query"] = (time.time() - t1) * 1000
+    try:
+        batch_rows = batch.select("invoice_id", "change_version").orderBy(
+            "change_version", "invoice_id"
+        ).collect()
+        stage_ms["query"] = (time.time() - t1) * 1000
 
-    batch_count = len(batch_rows)
-    if batch_count == 0:
+        batch_count = len(batch_rows)
+        if batch_count == 0:
+            return BatchResult(
+                consumer, state.last_sync_version, to_version, 0, False,
+                state.last_sync_version, state.last_processed_id, stage_ms,
+            )
+
+        docs = _assemble(header, lines, batch, model)
+        t2 = time.time()
+        written = write_documents(docs, out_dir, error_dir)
+        stage_ms["sink"] = (time.time() - t2) * 1000
+
+        # advance to the LAST row of the version-ordered pre-join batch
+        # (server.js:235-249) — only reached when the sink succeeded
+        t3 = time.time()
+        last = batch_rows[-1]
+        registry.advance(consumer, last.change_version, last.invoice_id)
+        stage_ms["update_state"] = (time.time() - t3) * 1000
+    finally:
         batch.unpersist()
-        return BatchResult(
-            consumer, state.last_sync_version, to_version, 0, False,
-            state.last_sync_version, state.last_processed_id, stage_ms,
-        )
-
-    docs = _assemble(header, lines, batch, model)
-    t2 = time.time()
-    if fail_sink:
-        batch.unpersist()
-        raise OSError("injected sink failure")
-    written = write_documents(docs, out_dir, error_dir)
-    stage_ms["sink"] = (time.time() - t2) * 1000
-
-    # advance to the LAST row of the version-ordered pre-join batch
-    # (server.js:235-249) — only reached when the sink succeeded
-    t3 = time.time()
-    last = batch_rows[-1]
-    registry.advance(consumer, last.change_version, last.invoice_id)
-    stage_ms["update_state"] = (time.time() - t3) * 1000
-    batch.unpersist()
 
     total_s = time.time() - t0
     return BatchResult(
@@ -382,6 +380,9 @@ def pull_batch(
     )
 
 
+MAX_DRAIN_BATCHES = 1000
+
+
 def drain(
     spark: SparkSession,
     log_dir: str | DataFrame,
@@ -392,12 +393,12 @@ def drain(
     model: InvoiceModel,
     out_dir: str,
     limit: int = 1000,
-    max_batches: int = 1000,
 ) -> list[BatchResult]:
     """Drain-until-empty loop (invoice-api/consumer.js:34-37 'immediate
-    re-poll while hasMore') — the batch analog of trigger(availableNow)."""
+    re-poll while hasMore') — the batch analog of trigger(availableNow),
+    capped at ``MAX_DRAIN_BATCHES`` pulls."""
     results = []
-    for _ in range(max_batches):
+    for _ in range(MAX_DRAIN_BATCHES):
         res = pull_batch(
             spark, log_dir, consumer, registry, header, lines, model, out_dir, limit
         )
@@ -416,8 +417,6 @@ def run_available_now(
     model: InvoiceModel,
     out_dir: str,
     checkpoint_root: str,
-    registry: SyncStateRegistry | None = None,
-    max_files_per_trigger: int | None = None,
     timeout_s: int = 300,
     doc_format: str = "json",
     error_dir: str | None = None,
@@ -429,14 +428,19 @@ def run_available_now(
 
     trigger(availableNow=True) drains everything present then stops —
     the reference's poll-until-hasMore loop, minus the hand-rolled cursor:
-    exact file-source offsets in the checkpoint replace (version, id).
+    exact file-source offsets in the checkpoint replace (version, id), so
+    this form takes no registry: the checkpoint is its only cursor.
+
+    A drain that does not finish within ``timeout_s`` is stopped and
+    raises TimeoutError, as ``feed.drain_feed`` does; the checkpoint
+    resumes it on the next call.
 
     ``doc_format="bson"`` writes reference-parity .bson files
     (invoice-api/server.js:62-80) through the same idempotent sink.
     """
     if doc_format not in ("json", "bson"):
         raise ValueError(f"doc_format must be 'json' or 'bson', got {doc_format!r}")
-    stream = cl.read_changelog_stream(spark, log_dir, max_files_per_trigger)
+    stream = cl.read_changelog_stream(spark, log_dir)
     metrics: dict = {"batches": 0, "documents": 0}
     sink = write_documents_bson if doc_format == "bson" else write_documents
 
@@ -447,12 +451,6 @@ def run_available_now(
         n = sink(docs, out_dir, error_dir)
         metrics["batches"] += 1
         metrics["documents"] += n
-        if registry is not None and n > 0:
-            row = latest.agg(
-                F.max(F.struct("change_version", "invoice_id")).alias("m")
-            ).first()
-            if row and row.m is not None:
-                registry.advance(consumer, row.m.change_version, row.m.invoice_id)
 
     checkpoint = os.path.join(checkpoint_root, consumer)
     query = (
@@ -461,7 +459,13 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_s)
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(
+            f"available-now drain of {log_dir} exceeded {timeout_s}s after "
+            f"{metrics['batches']} batches; checkpoint {checkpoint} "
+            "resumes the drain"
+        )
     progress = query.lastProgress
     if progress:
         metrics["last_progress"] = {

@@ -42,14 +42,10 @@ from pyspark.sql import functions as F
 from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.functions.similarity import PQ_K, PQ_M, pq_codebooks, pq_encode
 from sql_cdc_spark.streaming import feed as FEED
-from sql_cdc_spark.streaming.ann_maintenance import (
-    CHANGE_SCHEMA,
-    read_embedding_changes,
-)
+from sql_cdc_spark.streaming.ann_maintenance import CHANGE_SCHEMA
 
 __all__ = [
     "CHANGE_SCHEMA",
-    "read_embedding_changes",
     "collapse_batch",
     "build_codes",
     "apply_codes_changes",
@@ -107,23 +103,15 @@ def run_pq_maintenance(
     checkpoint_dir: str,
     initial_codes: DataFrame,
     books,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[DataFrame, int]:
     """Drain the change feed with trigger(availableNow), applying each
     micro-batch to the code table; returns (final_codes, n_batches).
-
-    Ownership: ``initial_codes`` (and every intermediate snapshot) is
-    RELEASED as it is superseded — callers must not reuse the passed-in
-    frame after this returns. The returned codes are live and
-    caller-owned."""
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    Ownership: as ``feed.drain_feed``."""
+    def _apply(prev: DataFrame, batch_df: DataFrame, batch_id: int) -> DataFrame:
         upserts, deletes = collapse_batch(batch_df)
         return apply_codes_changes(prev, upserts, deletes, books)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial_codes,
         _apply, release_local_checkpoint,
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

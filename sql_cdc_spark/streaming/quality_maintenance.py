@@ -128,18 +128,14 @@ def run_quality_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: QualityState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[QualityState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: QualityState, batch_df: DataFrame) -> QualityState:
+    def _apply(prev: QualityState, batch_df: DataFrame, batch_id: int) -> QualityState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_quality_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
         _apply, lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -106,20 +106,16 @@ def run_scd2_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: SCD2State,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[SCD2State, int]:
     """Drain the change feed with trigger(availableNow), merging each
-    micro-batch; returns (final_state, n_batches). ``initial`` and every
-    superseded state are released; the returned state is caller-owned.
+    micro-batch; returns (final_state, n_batches).
+    Ownership: as ``feed.drain_feed``.
 
     The feed must deliver versions in non-decreasing file order (the
     natural layout of a CDC extract directory); the watermark filter
     makes redelivery harmless rather than double-applied."""
     return FEED.drain_feed(
         spark, feed_dir, SCD2_CHANGE_SCHEMA, checkpoint_dir, initial,
-        lambda prev, batch_df: apply_scd2_batch(prev, batch_df),
+        lambda prev, batch_df, batch_id: apply_scd2_batch(prev, batch_df),
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

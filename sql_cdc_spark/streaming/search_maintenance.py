@@ -158,25 +158,17 @@ def run_search_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: SearchState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[SearchState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch to the index; returns (final_state,
-    n_batches). Ownership: ``initial`` (and every intermediate snapshot)
-    is RELEASED as superseded — the returned state is caller-owned."""
-    def _apply(prev: SearchState, batch_df: DataFrame) -> SearchState:
+    n_batches). Ownership: as ``feed.drain_feed``."""
+    def _apply(prev: SearchState, batch_df: DataFrame, batch_id: int) -> SearchState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_search_changes(
             prev, upserts.select("doc_id", "text"), deletes
         )
 
-    def _release(st: SearchState) -> None:
-        st.release()
-
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
-        _apply, _release,
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
+        _apply, lambda s: s.release(),
     )

@@ -100,18 +100,16 @@ def run_semdedup_maintenance(
     feed_dir: str,
     checkpoint_dir: str,
     initial: SemDedupState,
-    *,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[SemDedupState, int]:
     """Drain the embedding change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: SemDedupState, batch_df: DataFrame) -> SemDedupState:
+    def _apply(
+        prev: SemDedupState, batch_df: DataFrame, batch_id: int
+    ) -> SemDedupState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_semdedup_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
         lambda s: s.release(),
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -49,20 +49,16 @@ def run_sketch_maintenance(
     group_cols: list[str] | None = None,
     value_col: str = "value",
     p: int = HLL_P,
-    max_files_per_trigger: int | None = 1,
-    timeout_s: int = 300,
 ) -> tuple[DataFrame, int]:
     """Drain the feed with trigger(availableNow), merging each
     micro-batch's registers into the state; returns (final_state,
-    n_batches). ``initial_state`` and every superseded snapshot are
-    released; the returned state is live and caller-owned."""
+    n_batches). Ownership: as ``feed.drain_feed``."""
     gcols = group_cols or ["group_key"]
 
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    def _apply(prev: DataFrame, batch_df: DataFrame, batch_id: int) -> DataFrame:
         return apply_sketch_batch(prev, batch_df, gcols, value_col, p)
 
     return FEED.drain_feed(
         spark, feed_dir, EVENT_SCHEMA, checkpoint_dir, initial_state,
         _apply, release_local_checkpoint,
-        max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -11,10 +11,21 @@ import duckdb
 import pytest
 
 from sql_cdc_spark.session import get_spark
+from sql_cdc_spark.streaming.pipeline import InvoiceModel
 from sql_cdc_spark.tables import TABLE_NAMES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_DIR_SMALL = "/root/testdata/sf0.001"
+
+# the CDC pipeline's invoice model over the TPC-H orders/lineitem tables
+MODEL = InvoiceModel(
+    header_key="o_orderkey",
+    line_key_expr="l_orderkey * 8 + l_linenumber",
+    line_parent_key="l_orderkey",
+    header_cols=["o_custkey", "o_totalprice"],
+    line_cols=["l_linenumber", "l_quantity", "l_extendedprice"],
+    line_order_col="l_linenumber",
+)
 
 
 @pytest.fixture(scope="session")

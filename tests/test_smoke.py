@@ -69,3 +69,18 @@ spark.stop()
     assert (got["lang"], got["country"]) == ("en", "US")
     assert "-Dsql_cdc_spark.probe=42" in got["executor"]
     assert "-Duser.language=en" in got["executor"]
+
+
+def test_host_sizing_follows_affinity_and_memtotal():
+    """With no override the session takes every core it may run on and
+    40% of MemTotal as heap; the env overrides win; maxResultSize stays
+    below the heap at every size."""
+    from sql_cdc_spark.session import host_sizing
+
+    mem_kb = 16_479_424  # a 4-core, 15.7 GiB host
+    assert host_sizing({}, 4, mem_kb) == (4, "6437m", 1609)
+    env = {"SPARK_GRAFT_CPUS": "8", "SPARK_GRAFT_DRIVER_MEM": "6g"}
+    assert host_sizing(env, 4, mem_kb) == (8, "6g", 1536)
+    for mem, heap_mb in (("200m", 200), ("1g", 1024), ("48g", 48 * 1024)):
+        _, _, max_result = host_sizing({"SPARK_GRAFT_DRIVER_MEM": mem}, 4, mem_kb)
+        assert 0 < max_result < heap_mb

@@ -18,16 +18,7 @@ from sql_cdc_spark import tables
 from sql_cdc_spark.streaming import changelog as cl
 from sql_cdc_spark.streaming import pipeline as pl
 from sql_cdc_spark.streaming.registry import SyncStateRegistry
-from tests.conftest import SF_DIR_SMALL
-
-MODEL = pl.InvoiceModel(
-    header_key="o_orderkey",
-    line_key_expr="l_orderkey * 8 + l_linenumber",
-    line_parent_key="l_orderkey",
-    header_cols=["o_custkey", "o_totalprice"],
-    line_cols=["l_linenumber", "l_quantity", "l_extendedprice"],
-    line_order_col="l_linenumber",
-)
+from tests.conftest import MODEL, SF_DIR_SMALL
 
 
 @pytest.fixture()
@@ -135,38 +126,6 @@ def test_no_loss_no_dup_across_batch_boundaries(spark, base, tmp_path):
     assert cursors == sorted(cursors)
 
 
-def test_resume_after_sink_failure(spark, base, tmp_path):
-    """T3: injected sink failure must NOT advance the cursor; the retry
-    delivers the same batch (idempotent filenames absorb any re-writes)."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 10), seed=5)
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out_dir = str(tmp_path / "docs")
-
-    before = reg.read("c")
-    with pytest.raises(OSError):
-        pl.pull_batch(
-            spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir,
-            limit=5, fail_sink=True,
-        )
-    after_fail = reg.read("c")
-    assert (after_fail.last_sync_version, after_fail.last_processed_id) == (
-        before.last_sync_version,
-        before.last_processed_id,
-    )
-    assert not os.path.exists(out_dir) or not os.listdir(out_dir)
-
-    res = pl.pull_batch(
-        spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir, limit=5
-    )
-    assert res.processed > 0
-    after = reg.read("c")
-    assert (after.last_sync_version, after.last_processed_id) == (
-        res.last_version,
-        res.last_id,
-    )
-
-
 def test_multi_consumer_independence_and_reset(spark, base, tmp_path):
     """T6/T7: named consumers have independent cursors; reset rewinds one
     without touching the other."""
@@ -231,6 +190,21 @@ def test_streaming_available_now_and_incremental_resume(spark, base, tmp_path):
     )
     assert m3["documents"] == 1
     assert len(os.listdir(out_dir)) == n_files_1 + 1
+
+
+def test_run_available_now_timeout_stops_and_raises(spark, base, tmp_path):
+    """A drain cut by ``timeout_s`` stops its query and raises, pointing
+    at the checkpoint — never partial metrics with the stream still
+    running."""
+    header, lines = base
+    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 15), seed=13)
+    chk = str(tmp_path / "chk")
+    with pytest.raises(TimeoutError, match="resumes the drain"):
+        pl.run_available_now(
+            spark, w.log_dir, "s1", header, lines, MODEL,
+            str(tmp_path / "docs"), chk, timeout_s=0.05,
+        )
+    assert spark.streams.active == []
 
 
 def test_document_listing_source(spark, base, tmp_path):
@@ -827,7 +801,7 @@ def test_feed_schema_evolution_stream_drain(spark, tmp_path):
         spark, feed, "doc_id long, op string, change_version long"
     )
 
-    def _apply(state: dict, batch_df) -> dict:
+    def _apply(state: dict, batch_df, batch_id) -> dict:
         packed = batch_df.withColumn("payload", F.struct("text", "lang"))
         ups, dels = FEED.collapse_latest(packed, "doc_id", "payload")
         nxt = dict(state)
@@ -839,7 +813,7 @@ def test_feed_schema_evolution_stream_drain(spark, tmp_path):
 
     final, n_batches = FEED.drain_feed(
         spark, feed, merged, str(tmp_path / "chk"), {}, _apply,
-        lambda s: None, max_files_per_trigger=1,
+        lambda s: None,
     )
     assert n_batches >= 1
     assert final == {
@@ -1765,7 +1739,7 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
 
     # dense state through the SAME feed, its own drain: latest-op
     # collapse → remove-then-readd on the vector table
-    def _apply_vec(prev, batch_df):
+    def _apply_vec(prev, batch_df, batch_id):
         ups, ds = SM.collapse_batch(batch_df)
         changed = (
             ups.select("doc_id").unionByName(ds).distinct()
@@ -1829,7 +1803,7 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
     search_replay = SM.apply_search_changes(
         search_final, ups2.select("doc_id", "text"), ds2
     )
-    vec_replay = _apply_vec(vec_final, last_batch)
+    vec_replay = _apply_vec(vec_final, last_batch, vn - 1)
     assert [
         tuple(r) for r in _fused(search_replay, vec_replay).collect()
     ] == want
@@ -2292,49 +2266,11 @@ def test_maintenance_drain_cold_start_empty_feed(spark, tmp_path):
     )
     st = DD.build_near_dup_state(docs)
     final, n = DM.run_dedup_maintenance(
-        spark, str(tmp_path / "no_feed_yet"), str(tmp_path / "cchk"), st,
-        timeout_s=60,
+        spark, str(tmp_path / "no_feed_yet"), str(tmp_path / "cchk"), st
     )
     assert n == 0
     assert final is st
     assert final.pairs.count() == 0
-
-
-def test_drain_feed_third_param_detection(spark, tmp_path):
-    """Only a REQUIRED third positional parameter opts an apply_fn into
-    the batch-id calling form. A defaulted config flag (strict=False)
-    must keep its default — binding the batch id into it would silently
-    flip caller behavior — and a keyword-only param must not crash the
-    first micro-batch with a 3-positional-arg TypeError."""
-    from sql_cdc_spark.streaming import feed as FEED
-
-    seen: list = []
-
-    def _defaulted(prev, batch_df, strict=False):
-        seen.append(("defaulted", strict))
-        return prev
-
-    def _kwonly(prev, batch_df, *, log=None):
-        seen.append(("kwonly", log))
-        return prev
-
-    def _wants_id(prev, batch_df, batch_id):
-        seen.append(("id", batch_id))
-        return prev
-
-    fdir = str(tmp_path / "feed")
-    spark.createDataFrame([(1, "I", 1)], "k long, op string, v long")\
-        .coalesce(1).write.mode("append").parquet(fdir)
-    schema = "k long, op string, v long"
-    for i, fn in enumerate((_defaulted, _kwonly, _wants_id)):
-        _, n = FEED.drain_feed(
-            spark, fdir, schema, str(tmp_path / f"chk{i}"),
-            None, fn, lambda s: None, timeout_s=60,
-        )
-        assert n == 1
-    assert seen[0] == ("defaulted", False)
-    assert seen[1] == ("kwonly", None)
-    assert seen[2][0] == "id" and isinstance(seen[2][1], int)
 
 
 def test_discover_feed_schema_cold_start(spark, tmp_path):
@@ -3069,7 +3005,7 @@ def test_drain_feed_timeout_raises_not_partial(spark, tmp_path):
         FEED.drain_feed(
             spark, fdir, "k long, op string, v long",
             str(tmp_path / "chk"), None,
-            lambda prev, b: prev, lambda s: None, timeout_s=0.05,
+            lambda prev, b, i: prev, lambda s: None, timeout_s=0.05,
         )
 
 
