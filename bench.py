@@ -87,7 +87,6 @@ DOMAIN_GROUPED = [
     "rel_topn_other_rollup",    # top-N + OTHER report
     "evt_collapse_runs",        # gaps-and-islands run collapse
     "dd_source_overlap",        # source-pair duplication matrix
-    "sim_knn_join",             # bucketed k-NN self-join
     "evt_rolling_actives",      # rolling distinct-active census
     "evt_props_topk",           # typed JSON property top-k
     "txt_quality_gate",         # multi-rule quality gate
@@ -370,41 +369,26 @@ def stress_100x(spark, sf_dir: str) -> dict:
     # occupancy)) so per-bucket cost stays flat — the documented knob
     from sql_cdc_spark.queries.similarity_q import (
         bucket_vectors,
-        elect_dropped,
         elect_dropped_arrow,
-        knn_join,
         knn_join_arrow,
     )
 
     emb = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    # persist the synthesized corpus: the self-join reads it from both
-    # sides, and recomputing the 100-branch generation per side is
-    # generator cost, not operator cost — a real corpus is a parquet scan
+    # persist the synthesized corpus: both elections read it, and
+    # recomputing the 100-branch generation per read is generator cost,
+    # not operator cost — a real corpus is a parquet scan
     hemb = _hundredx_embeddings(emb).persist()
     try:
         n_vecs = hemb.count()
         bits = 14
-        probe = _cpu_probe_ms()
-        t0 = perf_counter()
-        # count + checksum: a bare .count() prunes the election's max(k)
-        # so the per-pair cosine never runs (r7 finding) — r6's recorded
-        # 4.26 s / 46,900 vecs/s here was the cosine-free plan
-        out["knn_matched_vecs"] = knn_join(hemb, n_bits=bits).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("nn_id").alias("chk")
-        ).first()["n"]
-        dt = perf_counter() - t0
         out["n_vecs"] = n_vecs
         out["knn_bits"] = bits
-        out["knn_seconds"] = round(dt, 3)
-        out["knn_vecs_per_second"] = round(n_vecs / dt, 1)
-        out["knn_probe_ms"] = probe
-        out["knn_probe_wide_ms"] = _cpu_probe_wide_ms()
-
-        # the bit-identical Arrow/BLAS strategy on the same corpus/bits
         probe = _cpu_probe_ms()
         t0 = perf_counter()
+        # count + checksum: the nn_id sum keeps the election from being
+        # pruned under a bare count
         out["knn_arrow_matched_vecs"] = knn_join_arrow(
             hemb, n_bits=bits
         ).agg(
@@ -416,22 +400,7 @@ def stress_100x(spark, sf_dir: str) -> dict:
         out["knn_arrow_probe_ms"] = probe
         out["knn_arrow_probe_wide_ms"] = _cpu_probe_wide_ms()
 
-        probe = _cpu_probe_ms()
-        t0 = perf_counter()
-        # count is prune-safe here: the election filters on the
-        # aggregated key, so the cosine fold cannot be pruned (audited
-        # r7/r8) — kept as the exact-JVM reference point
-        out["semdedup_dropped"] = elect_dropped(
-            bucket_vectors(hemb, n_bits=bits)
-        ).count()
-        dt = perf_counter() - t0
-        out["semdedup_seconds"] = round(dt, 3)
-        out["semdedup_vecs_per_second"] = round(n_vecs / dt, 1)
-        out["semdedup_probe_ms"] = probe
-        out["semdedup_probe_wide_ms"] = _cpu_probe_wide_ms()
-
-        # the Arrow-kernel strategy sim_semantic_dedup elects since r8
-        # (bit-equal by test) on the same corpus/bits
+        # the SemDeDup election sim_semantic_dedup runs, same corpus/bits
         probe = _cpu_probe_ms()
         t0 = perf_counter()
         out["semdedup_arrow_dropped"] = elect_dropped_arrow(
@@ -478,11 +447,8 @@ def graph_100x(spark, sf_dir: str) -> dict:
         out["edge_probe_ms"] = _cpu_probe_ms()
         out["edge_probe_wide_ms"] = _cpu_probe_wide_ms()
         t0 = perf_counter()
-        # the bit-identical Arrow election (tested ==
-        # knn_join everywhere) — the strategy a 100 TB graph build
-        # would use; measured on this same edge set: exact-JVM path
-        # 269.9 s, kernel 14.3 s (identical 164,981 edges and final
-        # PageRank delta)
+        # the Arrow election every graph consumer runs; measured
+        # 14.3 s for 164,981 edges on this edge set (32-core host)
         edges = (
             undirected_edges(knn_join_arrow(hemb, n_bits=14))
             .select("id_a", "id_b")
@@ -578,11 +544,7 @@ def knn_10x_stress(spark, sf_dir: str) -> dict:
     from time import perf_counter
 
     from sql_cdc_spark import tables
-    from sql_cdc_spark.queries.similarity_q import (
-        LSH_BITS,
-        knn_join,
-        knn_join_arrow,
-    )
+    from sql_cdc_spark.queries.similarity_q import LSH_BITS, knn_join_arrow
 
     emb = tables.load(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -594,19 +556,11 @@ def knn_10x_stress(spark, sf_dir: str) -> dict:
         n = tenx.count()
         probe = _cpu_probe_ms()
         out = {"input_vecs": n, "probe_ms": probe}
-        for label, op, bits in (
-            ("fixed", knn_join, LSH_BITS),
-            ("scaled", knn_join, LSH_BITS + 3),
-            # the bit-identical Arrow/BLAS strategy at the same bits
-            ("arrow", knn_join_arrow, LSH_BITS),
-        ):
+        for label, bits in (("fixed", LSH_BITS), ("scaled", LSH_BITS + 3)):
             t0 = perf_counter()
-            # count + nn_id checksum in ONE pass: a bare .count() lets
-            # Catalyst PRUNE the max(k) election aggregate, so the
-            # per-pair cosine never executes — r1-r6 recorded that
-            # cosine-free number as the knn cost (r7 finding); summing
-            # nn_id forces the full election
-            r = op(tenx, n_bits=bits).agg(
+            # count + nn_id checksum in ONE pass: summing nn_id keeps
+            # the election from being pruned under a bare count
+            r = knn_join_arrow(tenx, n_bits=bits).agg(
                 F.count(F.lit(1)).alias("n"), F.sum("nn_id").alias("chk")
             ).first()
             dt = perf_counter() - t0
@@ -1460,10 +1414,6 @@ def main() -> None:
                 "scaled_seconds": [
                     "scaled_bits", "scaled_seconds",
                     "scaled_matched_vecs", "scaled_vecs_per_second",
-                ],
-                "arrow_seconds": [
-                    "arrow_bits", "arrow_seconds",
-                    "arrow_matched_vecs", "arrow_vecs_per_second",
                 ],
             }),
             "probe_ms": [p["probe_ms"] for p in knn_passes],

@@ -1,38 +1,41 @@
-"""Arrow/NumPy per-bucket similarity kernels — the vectorized physical
-strategy behind the bucketed pair elections (sim_knn_join_arrow and,
-since round 8, every knn/SemDeDup consumer): instead of generating the
-per-bucket pair table and evaluating the 64-dim cosine as interpreted
-higher-order-function expressions per pair (~74 µs/pair measured r7 —
-HOF folds don't participate in whole-stage codegen and box per
-element), each bucket ships ONCE through Arrow to a grouped-map kernel
-that computes tiled cosine blocks with BLAS rank-1 updates and folds
-the election in-kernel. Measured r7 at the 100× point: 260.3 s exact
-vs 19.1 s in-kernel on the same 112M-pair election, bit-equal.
+"""Arrow/NumPy per-bucket similarity kernels — the one physical
+strategy behind the bucketed pair elections (sim_knn_join_arrow,
+sim_semantic_dedup, sim_semdedup_sweep, the graph consumers and their
+maintenance twins). Evaluating the 64-dim cosine per pair as
+interpreted higher-order-function expressions costs ~74 µs/pair
+(measured r7 — HOF folds don't participate in whole-stage codegen and
+box per element); instead each bucket ships ONCE through Arrow to a
+grouped-map kernel that computes tiled cosine blocks with BLAS rank-1
+updates and folds the election in-kernel.
 
-Exactness contract (pinned by tests/test_llm_ops.py bit-equality
-suites vs the exact-JVM paths):
+Exactness contract — the rows are the DuckDB oracles' rows
+(``_knn_join_sql``, ``_semantic_dedup_sql``, ``_semdedup_sweep_sql`` in
+queries/similarity_q.py), bit for bit, pinned by fuzz families 15 and 16
+(tests/test_fuzz_oracle.py) across bit widths, thresholds, corpus
+subsets and planted twins/clones:
 
 - Dot products accumulate ONE DIMENSION at a time
   (``block += outer(M[:, d], M[:, d])``), so every pair's dot is the
-  same left-to-right double summation the JVM fold and DuckDB's
-  ``list_dot_product`` perform — never ``np.dot``/``einsum``, whose
-  pairwise summation would drift the last ulp.
-- Micro-cosine rounding mirrors the JVM/oracle DOUBLE rounding
-  (``F.round(cos, 6)`` = BigDecimal.valueOf HALF_UP — the SHORTEST
-  round-trip decimal of the double, measured against Spark itself —
-  then the ×1e6 re-round): the vectorized fast path
-  ``floor(|x|·1e6 + 0.5)`` agrees everywhere except when the double
-  product lands within ~1 ulp of a .5 midpoint; those rare elements
-  fall back to ``decimal`` HALF_UP on ``repr(x)`` (ADVICE r7 — the
-  knife-edge window is now exact, not documented-away; parity pinned
-  against F.round directly in tests/test_simkernel.py).
-- Elections fold through the SAME bijective bigint keys the JVM
-  aggregates (cosine-desc/smallest-id for nearest,
-  smallest-qualifying-mate for SemDeDup), so ties break identically.
-- Zero-norm vectors: the kernel pins non-finite cosines (0/0) to the
-  sentinel 0 — the defined behavior (ADVICE r7). The exact-JVM path
-  raises CAST_OVERFLOW under ANSI on the same degenerate input, so
-  the kernel is strictly more defined; pinned by a unit test.
+  same left-to-right double summation DuckDB's ``list_dot_product``
+  performs — never ``np.dot``/``einsum``, whose pairwise summation
+  would drift the last ulp.
+- Micro-cosine rounding mirrors the oracle's DOUBLE rounding
+  (``ROUND(cos, 6)`` HALF_UP on the SHORTEST round-trip decimal of the
+  double, the same value Spark's ``F.round`` gives, then the ×1e6
+  re-round): the vectorized fast path ``floor(|x|·1e6 + 0.5)`` agrees
+  everywhere except when the double product lands within ~1 ulp of a
+  .5 midpoint; those rare elements fall back to ``decimal`` HALF_UP on
+  ``repr(x)`` (parity pinned against F.round directly in
+  tests/test_simkernel.py).
+- Ties: the nearest election maxes the bijective bigint key
+  (micro+1e6)·2^40 + (2^40−1−id), so the highest cosine wins and ties go
+  to the SMALLEST neighbor id (the oracle's ``ORDER BY cos_sim DESC,
+  nn_id``); the SemDeDup election mins mate·2^21 + (micro+1e6), so the
+  SMALLEST qualifying mate wins (the oracle's ``ORDER BY mate``). Ids
+  must fit 40 bits.
+- Zero-norm vectors: non-finite cosines (0/0) pin to the sentinel 0,
+  as the oracle's NULLIF/COALESCE guard does; fuzz family 15's planted
+  zero vector and a unit test pin it.
 
 Memory contract (VERDICT r7 #3 — the hot-bucket defense): both the
 query and the MATE axis are tiled (``Q_BLOCK × M_BLOCK`` slabs with a
@@ -42,12 +45,7 @@ width, never the quadratic Gram slab (a 1M-row hot bucket held a
 4096×1e6 ≈ 32 GB slab under the r7 kernel; it now holds 4096×4096
 ≈ 134 MB regardless of width). The grouped-map input itself is the
 remaining linear term: pandas materializes the whole bucket
-(w·(dim+1)·8 B ≈ 0.5 GB at w=1M), the same order as the exact path's
-salted shuffle partitions.
-
-Reference parity: the per-pair semantics are sim_knn_join's /
-sim_semantic_dedup's (see queries/similarity_q.py for the reference
-citations); this module only changes the physical strategy.
+(w·(dim+1)·8 B ≈ 0.5 GB at w=1M).
 """
 
 from __future__ import annotations
@@ -58,7 +56,7 @@ import pandas as pd
 Q_BLOCK = 4096  # query-axis tile rows
 M_BLOCK = 4096  # mate-axis tile columns (r7 slabbed the full mate axis)
 
-ID_BITS = 40  # nearest-election id budget (matches elect_nearest)
+ID_BITS = 40  # nearest-election id budget
 ID_MASK = (1 << ID_BITS) - 1
 _I64_MIN = np.iinfo(np.int64).min
 _I64_MAX = np.iinfo(np.int64).max
@@ -138,9 +136,11 @@ def elect_nearest_pdf(
     q_block: int = Q_BLOCK,
     m_block: int = M_BLOCK,
 ) -> pd.DataFrame:
-    """Per-row top-1 mate by (cos desc, id asc) — the elect_nearest
-    election, folded as a running max of the same bijective bigint key
-    ((micro+1e6)·2^40 + (2^40−1−id)) across mate tiles."""
+    """Per-row top-1 mate by (cos desc, id asc) — the k-NN election
+    (the oracle's ROW_NUMBER over cos_sim DESC, nn_id), folded as a
+    running max of the bijective bigint key ((micro+1e6)·2^40 +
+    (2^40−1−id)) across mate tiles; vectors alone in their bucket emit
+    no row."""
     cols = {"vec_id": "int64", "nn_id": "int64", "cos_sim": "float64"}
     if with_bucket:
         cols["bucket"] = "int32"
@@ -175,10 +175,10 @@ def elect_dropped_pdf(
     q_block: int = Q_BLOCK,
     m_block: int = M_BLOCK,
 ) -> pd.DataFrame:
-    """The SemDeDup election (elect_dropped): per row, the SMALLEST
-    smaller-id mate with micro-cosine ≥ t_micro, folded as a running
-    min of the same bigint key (mate·2^21 + micro+1e6) the JVM
-    aggregates; rows with no qualifying mate emit nothing."""
+    """The SemDeDup election: per row, the SMALLEST smaller-id mate with
+    micro-cosine ≥ t_micro (the oracle's first qualifying mate by id),
+    folded as a running min of the bigint key (mate·2^21 + micro+1e6);
+    rows with no qualifying mate emit nothing."""
     cols = {
         "vec_id": "int64",
         "keeper_id": "int64",

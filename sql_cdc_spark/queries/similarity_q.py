@@ -5,7 +5,7 @@ LSH-bucketed scale path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark import tables
@@ -647,85 +647,56 @@ FROM m ORDER BY vec_id
 """
 
 
-def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sim_knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed k-NN self-JOIN: EVERY vector's nearest neighbor (top-1 by
     exact cosine) among the vectors sharing its SRP-LSH bucket — the
     semantic-dedup primitive at corpus scale, where 'find each doc's
     closest sibling' must never become an all-pairs scan. The candidate
     space is the per-bucket self-join (256 buckets from 8 deterministic
-    hyperplanes); the argmax is ONE max_by aggregate over an ordering
-    struct (cos_sim, −nn_id), so ties break to the smallest neighbor id
-    identically on any engine. Vectors alone in their bucket emit no row
-    (single-probe recall is the documented trade; the multi-probe lever
-    is sim_multiprobe_topk).
+    hyperplanes); the argmax orders by (cos_sim desc, nn_id asc), so
+    ties break to the smallest neighbor id identically on any engine.
+    Vectors alone in their bucket emit no row (single-probe recall is
+    the documented trade; the multi-probe lever is
+    sim_multiprobe_topk).
 
     Scale note: bucket width must track corpus size — per-bucket work is
     quadratic in bucket occupancy, so n_bits is chosen to hold the mean
     bucket near a target size (≈ log2(N / target)); 8 bits fits the test
     corpus, a 100 TB corpus runs the same plan at 20+ bits (or the IVF
-    coarse quantizer) so occupancy, and thus per-bucket cost, stays flat.
+    coarse quantizer) so occupancy, and thus per-bucket cost, stays flat
+    (measured in bench.py::knn_10x_stress).
 
-    Registry status: oracle-parity-gated in pytest this round; registered
-    in the round-5 driver window."""
-    return knn_join(tables.load(spark, sf_dir, "embeddings"))
-
-
-def knn_join(emb: DataFrame, n_bits: int = LSH_BITS) -> DataFrame:
-    """The bucketed nearest-neighbor self-join over any
-    (vec_id, embedding) frame — see sim_knn_join. ``n_bits`` is the
-    scale knob: per-bucket pair cost is quadratic in bucket width, so
-    bits must grow ~log2 with the corpus to keep expected width (and
-    per-vector cost) constant — measured in bench.py::knn_10x_stress."""
-    return elect_nearest(bucket_vectors(emb, n_bits)).orderBy("vec_id")
-
-
-def sim_knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Arrow/NumPy scale path for the bucketed k-NN self-join —
-    IDENTICAL semantics and bit-identical results to sim_knn_join
-    (same oracle), different physical strategy: instead of generating
-    the per-bucket pair table and evaluating the 64-dim cosine as
-    interpreted higher-order-function expressions per pair (~74 µs/pair
-    measured — HOF folds don't participate in whole-stage codegen and
-    box per element), each bucket ships ONCE through Arrow to a
-    grouped-map kernel that computes the whole bucket's cosine matrix
-    with vectorized NumPy and elects per-row argmax in-kernel.
-
-    Exactness is by construction, not tolerance: the kernel accumulates
-    the Gram matrix one DIMENSION at a time (G += outer(M[:,d], M[:,d]))
-    so every pair's dot product is the same left-to-right double
-    summation the JVM fold and DuckDB's list_dot_product perform;
-    norms come from the same per-dimension accumulation; rounding is
-    floor(|x|·1e6 + 0.5)·sign (the HALF_UP convention) and ties break
-    through the SAME (cos_micro, −nn_id) bigint key encoding
-    elect_nearest maxes. Pinned by bit-equality tests vs knn_join on
-    the driver corpus, planted twins/clones, and coarse bucketings.
-
-    Scale shape: Arrow traffic is the VECTOR table (one row per vector
-    — never the pair table), compute is BLAS-rank-1 updates (measured
-    r7 at the 100× point: the 112M-pair election reads 260.3 s
-    exact-JVM vs 19.1 s in-kernel, 13.7×, bit-equal); both kernel axes
-    are TILED (functions/simkernel.py, VERDICT r7 #3) so peak task
+    Physical strategy: each bucket ships ONCE through Arrow to a
+    grouped-map kernel (functions/simkernel.py) that computes tiled
+    cosine blocks with vectorized NumPy and elects per-row argmax
+    in-kernel. Arrow traffic is the VECTOR table (one row per vector —
+    never the pair table), and both kernel axes are TILED so peak task
     memory is the tile plus the bucket's own vector table — linear in
-    bucket width, never the quadratic Gram slab. This is the
-    documented 'when Python is unavoidable, Arrow-batched, never
-    per-row' escape hatch applied to the one operator whose per-pair
-    arithmetic dominates at corpus scale; since round 8 it is the
-    strategy every knn/SemDeDup consumer elects (VERDICT r7 #1), with
-    knn_join retained as the cross-engine exact reference."""
+    bucket width, never the quadratic Gram slab. The kernel module
+    states the exactness and tie contract; the DuckDB oracle
+    (_knn_join_sql) defines the rows, and fuzz family 15 pins the
+    kernel to it across bit widths, corpus subsets and planted
+    twins/clones."""
     return knn_join_arrow(tables.load(spark, sf_dir, "embeddings"))
 
 
 def knn_join_arrow(emb: DataFrame, n_bits: int = LSH_BITS) -> DataFrame:
-    """The grouped-map kernel form of knn_join — see sim_knn_join_arrow."""
+    """The bucketed nearest-neighbor self-join over any
+    (vec_id, embedding) frame — see sim_knn_join_arrow. ``n_bits`` is
+    the scale knob: per-bucket pair cost is quadratic in bucket width,
+    so bits must grow ~log2 with the corpus to keep expected width (and
+    per-vector cost) constant."""
     return elect_nearest_arrow(bucket_vectors(emb, n_bits)).orderBy("vec_id")
 
 
 def elect_nearest_arrow(vb: DataFrame, with_bucket: bool = False) -> DataFrame:
-    """elect_nearest through the per-bucket Arrow kernel
-    (functions/simkernel.py) — bit-identical rows, vectorized
-    arithmetic. ``with_bucket`` appends the elector's bucket column
-    (free here — it is the group key; the exact path needs a
-    corpus-scale join to recover it, streaming/knn_maintenance.py)."""
+    """The per-bucket top-1 election over a bucketed (vec_id, embedding,
+    bucket) frame, through the Arrow kernel (functions/simkernel.py) —
+    unordered. A vector's row depends ONLY on its own bucket's
+    membership, which is what makes per-bucket incremental
+    recomputation exact (streaming/knn_maintenance.py).
+    ``with_bucket`` appends the elector's bucket column (free: it is
+    the group key)."""
     from sql_cdc_spark.functions import simkernel as K
 
     schema = "vec_id long, nn_id long, cos_sim double"
@@ -744,9 +715,12 @@ SEMDEDUP_T = 0.35  # within-bucket cosine above which a doc is redundant
 def elect_dropped_arrow(
     vb: DataFrame, threshold: float = SEMDEDUP_T
 ) -> DataFrame:
-    """elect_dropped through the per-bucket Arrow kernel — the SemDeDup
-    election with identical rows (same bigint min-key fold, in-kernel);
-    see functions/simkernel.py for the exactness/memory contract.
+    """The SemDeDup election over a bucketed (vec_id, embedding, bucket)
+    frame, through the per-bucket Arrow kernel — see sim_semantic_dedup.
+    Unordered; a vector's row depends ONLY on its own bucket's
+    membership, which is what makes per-bucket incremental
+    recomputation exact (streaming/semdedup_maintenance.py). See
+    functions/simkernel.py for the exactness/memory contract.
     ``threshold`` must be a ≤6-dp decimal (the micro-domain contract;
     fuzz family 16 sweeps it)."""
     from sql_cdc_spark.functions import simkernel as K
@@ -778,9 +752,7 @@ def knn_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session's ONE materialized top-1-neighbor table per sf_dir —
     every graph consumer (sim_pagerank_fixed3 / sim_pagerank_step /
     sim_mutual_knn) reads this _cache.session_cached frame, built
-    through the Arrow kernel strategy (VERDICT r7 #1: the consumers
-    now inherit the measured 13.7×; bit-equality with the exact path
-    is pinned, so their oracles are unchanged)."""
+    through the Arrow kernel (knn_join_arrow)."""
     from sql_cdc_spark.queries._cache import session_cached
 
     return session_cached(
@@ -788,48 +760,6 @@ def knn_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("knn_best", sf_dir),
         lambda: knn_join_arrow(tables.load(spark, sf_dir, "embeddings")),
     )
-
-
-def elect_nearest(vb: DataFrame) -> DataFrame:
-    """The per-bucket top-1 election over a bucketed (vec_id, embedding,
-    bucket) frame — unordered. Like elect_dropped, a vector's row
-    depends ONLY on its own bucket's membership, which is what makes
-    per-bucket incremental recomputation exact
-    (streaming/knn_maintenance.py)."""
-    joined = _salted_bucket_pairs(vb, "nn_id")
-    cos = _pair_cosine()
-    # Bijective bigint encoding of the (cos desc, nn_id asc) argmax:
-    # 6-dp cosine (+1e6 shift, 21 bits) in the high bits, the id
-    # complement (2^40-1 − nn) in the low 40 — plain max() picks the
-    # highest cosine, ties to the SMALLEST neighbor id, and decodes back
-    # out. A struct max_by forces SortAggregate (two full sorts of the
-    # pair table + skew stragglers, ~250-300 s at the 100× stress vs
-    # ~20 s for this hash-aggregable form — same lesson as
-    # elect_dropped). Contract: ids must fit 40 bits (1.1e12); the
-    # repo's corpora top out near 2^34.
-    cos_micro = F.round(cos * 1_000_000).cast("long")
-    key = (cos_micro + F.lit(1_000_000)) * F.lit(1 << 40) + (
-        F.lit((1 << 40) - 1) - F.col("nn_id")
-    )
-    pairs = (
-        joined
-        .filter(F.col("vec_id") != F.col("nn_id"))
-        .select("vec_id", key.alias("k"))
-    )
-    best = (
-        pairs.groupBy("vec_id")
-        .agg(F.max("k").alias("k"))
-        .select(
-            "vec_id",
-            (F.lit((1 << 40) - 1) - F.col("k") % F.lit(1 << 40)).alias(
-                "nn_id"
-            ),
-            (
-                (F.expr(f"k div {1 << 40}") - F.lit(1_000_000)) / F.lit(1e6)
-            ).alias("cos_sim"),
-        )
-    )
-    return best
 
 
 def _knn_join_sql(
@@ -857,79 +787,6 @@ ORDER BY vec_id
 """
 
 
-BUCKET_SALT = 16   # fan-out of the salted bucket self-joins (see below)
-
-
-def _salted_bucket_pairs(vb: DataFrame, right_id: str) -> DataFrame:
-    """The bucket self-join of knn_join / elect_dropped, SALTED: the
-    left side takes a deterministic id-hash salt, the right side is
-    replicated to every salt value, and the join key becomes
-    (bucket, salt) — every pair produced exactly once, but a hot
-    bucket's pair space splits ``BUCKET_SALT`` ways across tasks.
-
-    Why this exists (100×-measured): real embeddings cluster, so a few
-    SRP buckets go mega (max 2,798 of 200k vectors) and the per-pair
-    64-dim cosine is interpreted expression work — one shuffle
-    partition ends up owning most of the 56M-pair compute while its
-    BYTE size stays far under AQE's skew-split threshold (byte-based
-    skew detection cannot see compute-bound rows). Measured: 400+ s
-    with a straggler tail unsalted vs ~17 s salted on the same pairs.
-    Cost: the right side is duplicated ×16 BEFORE its shuffle — 3.2M
-    rows at the stress point, nothing against the pair space.
-
-    Both sides ship the PRE-CAST double array and the PRE-COMPUTED
-    norm (__na/__nc): the cosine denominator is a per-vector constant,
-    so folding sqrt(dot(e,e)) per PAIR paid two 64-element interpreted
-    folds + a cast allocation per candidate. Measured r7 at the 100×
-    point: full-cosine election ~290 s → 260 s (~10% — the remaining
-    per-pair dot fold dominates; the order-of-magnitude lever is the
-    Arrow kernel, sim_knn_join_arrow). Values bit-identical: same
-    double expressions, same order, evaluated once per row instead of
-    once per pair."""
-    ea = SIM.as_double_array(F.col("embedding"))
-    sa = vb.select(
-        F.col("vec_id"),
-        ea.alias("__ea"),
-        SIM.norm(ea).alias("__na"),
-        "bucket",
-    ).withColumn(
-        "__s", F.pmod(F.xxhash64("vec_id"), F.lit(BUCKET_SALT)).cast("int")
-    )
-    sc = vb.select(
-        F.col("vec_id").alias(right_id),
-        ea.alias("__ec"),
-        SIM.norm(ea).alias("__nc"),
-        "bucket",
-    ).withColumn(
-        "__s",
-        F.explode(F.array(*[F.lit(i) for i in range(BUCKET_SALT)])),
-    )
-    return sa.join(sc, ["bucket", "__s"]).drop("__s")
-
-
-def _pair_cosine() -> Column:
-    """Exact 6-dp cosine over a _salted_bucket_pairs row: the dot folds
-    per pair (irreducible), the norms read the per-vector __na/__nc
-    columns. Bit-identical to the oracle's
-    ROUND(dot/(sqrt(dot aa)·sqrt(dot cc)), 6) — sqrt(dot(e,e)) is the
-    same double whether folded per pair or per row.
-
-    Zero-norm sentinel (ADVICE r8): a zero vector's 0/0 cosine is NaN,
-    which previously CRASHED this path downstream (ANSI NaN→bigint in
-    the election key) while DuckDB ordered NaN ABOVE every real cosine
-    — nanvl pins it to 0, matching the Arrow kernel's sentinel and the
-    NULLIF/COALESCE guard now in the oracle SQL; a planted zero-norm
-    fuzz seed pins all three cross-engine."""
-    return F.nanvl(
-        F.round(
-            SIM.dot(F.col("__ea"), F.col("__ec"))
-            / (F.col("__na") * F.col("__nc")),
-            6,
-        ),
-        F.lit(0.0),
-    )
-
-
 def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) re-expressed with
     deterministic cluster scoping: drop every vector that has a
@@ -949,9 +806,8 @@ def sim_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper_id for many dropped rows.
 
     Scale shape: identical to sim_knn_join_arrow — per-bucket
-    grouped-map Arrow kernel (the strategy every election consumer
-    elects since round 8, VERDICT r7 #1; bit-equal to the exact
-    elect_dropped by test), no corpus sort beyond the bounded result;
+    grouped-map Arrow kernel (elect_dropped_arrow), no corpus sort
+    beyond the bounded result;
     bucket width is the documented n_bits knob
     (bench.py::knn_10x_stress)."""
     emb = tables.load(spark, sf_dir, "embeddings")
@@ -970,62 +826,6 @@ def bucket_vectors(emb: DataFrame, n_bits: int = LSH_BITS) -> DataFrame:
     )
 
 
-def elect_dropped(
-    vb: DataFrame, threshold: float = SEMDEDUP_T
-) -> DataFrame:
-    """The SemDeDup election over a bucketed (vec_id, embedding, bucket)
-    frame — see sim_semantic_dedup. Unordered; a vector's row depends
-    ONLY on its own bucket's membership, which is what makes per-bucket
-    incremental recomputation exact (streaming/semdedup_maintenance.py).
-
-    Two 100×-measured plan rules are baked in. (1) The threshold is a
-    PROJECTION (null-when-below key, aggregated with null-ignoring min),
-    not a filter: a pair-level ``cos >= τ`` predicate gets pushed INTO
-    the bucket join's condition, where the 64-dim cosine is evaluated
-    per candidate outside codegen and then AGAIN in the projection.
-    (2) The election aggregates a plain ENCODED BIGINT, not a struct:
-    min/max over a struct forces SortAggregate — two full sorts of the
-    pair table plus a skew-bound straggler tail, measured ~250-300 s at
-    100× vs ~20 s for the hash-aggregable encoded form."""
-    joined = _salted_bucket_pairs(vb, "__mate")
-    cos = _pair_cosine()
-    # Bijective bigint encoding of (mate, cos): mate in the high bits so
-    # plain min() IS the smallest-qualifying-mate election, the 6-dp
-    # cosine (already rounded by SIM.cosine; +1e6 shift keeps it
-    # non-negative) in the low 21 bits so the keeper's score decodes
-    # back out. Why not min_by/min-over-struct: a struct aggregate
-    # forces SortAggregate — the 100× stress measured the struct form at
-    # ~250-300 s vs ~20 s for this hash-aggregable plain min over the
-    # same 56M pairs (plus two full sorts and a skew-bound straggler
-    # tail this avoids). Contract: ids must fit 42 bits (4.4e12) so the
-    # shifted key stays under 2^63 — documented, far above any corpus id
-    # in the repo including the 100× synthetics (~2^34).
-    cos_micro = F.round(cos * 1_000_000).cast("long")
-    key = F.when(
-        cos >= threshold,
-        F.col("__mate") * F.lit(1 << 21) + (cos_micro + F.lit(1_000_000)),
-    )
-    pairs = (
-        joined
-        .filter(F.col("__mate") < F.col("vec_id"))
-        .select("vec_id", "bucket", key.alias("k"))
-    )
-    return (
-        pairs.groupBy("vec_id", "bucket")
-        # nulls (below-threshold pairs) ignored; all-null groups drop out
-        .agg(F.min("k").alias("k"))
-        .filter(F.col("k").isNotNull())
-        .select(
-            "vec_id",
-            F.expr(f"k div {1 << 21}").alias("keeper_id"),
-            (
-                (F.col("k") % F.lit(1 << 21) - F.lit(1_000_000)) / F.lit(1e6)
-            ).alias("cos_sim"),
-            "bucket",
-        )
-    )
-
-
 # the SemDeDup tuning sweep's thresholds, micro-cosine units; the middle
 # point IS the registered election's SEMDEDUP_T so the sweep and the
 # decision query stay tied (guarded by an invariant test)
@@ -1040,10 +840,10 @@ def sim_semdedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer drop ppm.
 
     Scale shape: ONE per-bucket Arrow-kernel pass (the
-    sim_semantic_dedup strategy since round 8, VERDICT r7 #1 — the
-    per-vector MAX smaller-id-mate micro-cosine folds IN-KERNEL, so
-    not even the pair-key table is materialized; bit-equal to the
-    salted-JVM fold by test), and every threshold then reads that
+    sim_semantic_dedup strategy — the per-vector MAX smaller-id-mate
+    micro-cosine folds IN-KERNEL, so not even the pair-key table is
+    materialized; fuzz family 16 pins the fold to the DuckDB per-vector
+    max), and every threshold then reads that
     |V|-row table with a conditional sum; adding thresholds is free.
     A vector's drop decision at ANY threshold is a pure function of
     its max mate cosine, so the sweep is exact, not sampled. The
@@ -1289,12 +1089,6 @@ LIMIT {HYBRID_TOPK}
 ANN_EVAL_PROBES = 6
 
 
-def _probe_topk_kernel(probes: list[tuple[int, list[float]]], k: int):
-    from sql_cdc_spark.functions import simkernel as K
-
-    return K.exact_probe_topk_kernel(probes, k)
-
-
 def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality harness: recall@k of the single-probe LSH path
     against brute-force exact top-k, per probe — the measurement that
@@ -1324,6 +1118,8 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged and re-proves value identity."""
     from pyspark.sql.window import Window
 
+    from sql_cdc_spark.functions import simkernel as K
+
     emb = tables.load(spark, sf_dir, "embeddings")
     vb = emb.select(
         "vec_id",
@@ -1349,7 +1145,7 @@ def sim_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", SIM.as_double_array(F.col("embedding")).alias("embedding")
         )
         .mapInArrow(
-            _probe_topk_kernel(probes, TOP_K),
+            K.exact_probe_topk_kernel(probes, TOP_K),
             "probe_id long, vec_id long, micro long",
         )
     )
@@ -1655,8 +1451,7 @@ def sim_pagerank_fixed3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the expensive subtree (the bucketed knn election) is
     computed ONCE — it enters through the documented
     _cache.session_cached lifecycle under ("knn_best", sf_dir), built
-    through the Arrow kernel strategy since round 8 (VERDICT r7 #1 —
-    bit-equal to the exact path by test, 13.7× at the 100× point), so
+    through the Arrow kernel (knn_join_arrow), so
     the three unrolled rounds (and any other graph query in the
     session) read the materialized one-row-per-vector table rather
     than re-running the pair pass per reference. Each round is one
@@ -2125,8 +1920,6 @@ QUERIES: dict[str, QueryEntry] = {
     "sim_norm_stats": QueryEntry(sim_norm_stats, _NORM_STATS_SQL),
     "sim_embedding_quantize": QueryEntry(sim_embedding_quantize, _QUANTIZE_SQL),
     "sim_quantized_topk": QueryEntry(sim_quantized_topk, _QTOPK_SQL),
-    "sim_knn_join": QueryEntry(sim_knn_join, _knn_join_sql()),
-    # bit-identical Arrow/BLAS strategy — same oracle BY DESIGN
     "sim_knn_join_arrow": QueryEntry(sim_knn_join_arrow, _knn_join_sql()),
     "sim_semantic_dedup": QueryEntry(sim_semantic_dedup, _semantic_dedup_sql()),
     "sim_semdedup_sweep": QueryEntry(

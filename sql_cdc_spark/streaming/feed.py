@@ -144,8 +144,10 @@ def drain_feed(
     is stable across restart/replay and keeps numbering across a resumed
     drain. A drain that does not terminate within ``timeout_s`` is
     STOPPED and raises TimeoutError — never a silent partial state with
-    a live stream still mutating it; the checkpoint resumes the drain on
-    the next call.
+    a live stream still mutating it; an ``apply_fn`` that raises stops
+    the drain the same way and its error propagates. Either way the
+    last applied state is released, and the checkpoint has committed
+    the batches applied so far, so a resumed drain starts after them.
 
     Ownership: each superseded state is released via ``release_fn`` the
     moment its successor exists — callers must not reuse the passed-in
@@ -169,20 +171,22 @@ def drain_feed(
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_s):
-        # Returning a partial state here would be a live hazard, not just
-        # an incomplete answer: the still-running stream keeps applying
-        # batches and release_fn-ing the very object the caller would
-        # hold. Stop the stream and fail loudly; the checkpoint makes the
-        # next drain resume exactly where this one was cut off. The last
-        # applied state is released too (ownership transferred to this
-        # drain — the docstring contract), so repeated timeouts in a
+    try:
+        if not query.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"feed drain at {feed_dir} exceeded {timeout_s}s after "
+                f"{holder['batches']} batches; checkpoint {checkpoint_dir} "
+                "resumes the drain"
+            )
+    except BaseException:
+        # A timeout or a failing batch: returning a partial state would
+        # be a live hazard (a still-running stream keeps applying batches
+        # and release_fn-ing the object the caller would hold), and no
+        # caller can reach the state built so far. Stop the stream and
+        # release the last applied state (ownership transferred to this
+        # drain — the docstring contract), so repeated failures in a
         # long-lived session don't accumulate orphaned checkpoint blocks.
         query.stop()
         release_fn(holder["state"])
-        raise TimeoutError(
-            f"feed drain at {feed_dir} exceeded {timeout_s}s after "
-            f"{holder['batches']} batches; checkpoint {checkpoint_dir} "
-            "resumes the drain"
-        )
+        raise
     return holder["state"], holder["batches"]

@@ -1,11 +1,11 @@
 """Streaming k-NN-graph maintenance — the bucketed top-1 neighbor table
-behind sim_knn_join (and therefore the mutual-kNN edge set and the
+behind sim_knn_join_arrow (and therefore the mutual-kNN edge set and the
 PageRank hub report derived from it) kept current from an embedding
 change feed, the graph-family member of the SemDeDup / ANN-posting
 maintenance family.
 
 Why per-bucket recomputation is exact: a vector's nearest-neighbor row
-(argmax cosine over its OWN SRP bucket, the sim_knn_join semantics)
+(argmax cosine over its OWN SRP bucket, the sim_knn_join_arrow semantics)
 depends only on its bucket's membership. A change batch alters
 membership in exactly the buckets its touched vectors leave or enter
 (an embedding edit can move a vector between buckets — both sides are
@@ -18,8 +18,9 @@ displace existing best rows throughout its bucket.
 
 Per-batch work: bucketing is O(|batch| · dim) map-side; the affected
 bucket list is batch-bounded and broadcasts; the re-election is the
-salted per-bucket self-join restricted to affected buckets; the state
-rewrite is one broadcast anti-join + union per table.
+per-bucket Arrow kernel restricted to affected buckets (its group key
+tags each row with the bucket the anti-join needs); the state rewrite
+is one broadcast anti-join + union per table.
 """
 
 from __future__ import annotations
@@ -61,19 +62,10 @@ class KnnState(NamedTuple):
             release_local_checkpoint(f)
 
 
-def _best_with_bucket(vb: DataFrame) -> DataFrame:
-    """The election's rows tagged with the elector's bucket (the anti-
-    join key incremental application needs). Through the Arrow kernel
-    (VERDICT r7 #1 — bit-equal to elect_nearest by test) the bucket is
-    the group key, so the tag is FREE: the exact path needed a
-    corpus-scale shuffle-hash join to recover it."""
-    return elect_nearest_arrow(vb, with_bucket=True)
-
-
 def build_knn_state(vectors: DataFrame) -> KnnState:
     """Full build from a (vec_id, embedding) corpus."""
     vb = FEED.ckpt(bucket_vectors(vectors))
-    return KnnState(vb, FEED.ckpt(_best_with_bucket(vb)))
+    return KnnState(vb, FEED.ckpt(elect_nearest_arrow(vb, with_bucket=True)))
 
 
 def apply_knn_changes(
@@ -96,7 +88,9 @@ def apply_knn_changes(
     vb2 = FEED.ckpt(
         state.vb.join(cb, "vec_id", "left_anti").unionByName(new_vb)
     )
-    re_elected = _best_with_bucket(vb2.join(ab, "bucket", "left_semi"))
+    re_elected = elect_nearest_arrow(
+        vb2.join(ab, "bucket", "left_semi"), with_bucket=True
+    )
     best2 = FEED.ckpt(
         state.best.join(ab, "bucket", "left_anti")
         .select(*state.best.columns)

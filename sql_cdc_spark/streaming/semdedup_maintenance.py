@@ -16,7 +16,7 @@ row-level patching would miss.
 
 Per-batch work: bucketing is O(|batch| · dim) map-side; the affected
 bucket list is batch-bounded and broadcasts; the re-election is the
-per-bucket self-join restricted to affected buckets; the state rewrite
+per-bucket Arrow kernel restricted to affected buckets; the state rewrite
 is one broadcast anti-join + union per table — at cluster scale an
 incremental parquet/Delta write, never a corpus re-scan.
 """

@@ -1495,14 +1495,14 @@ def test_random_query14_matches_duckdb(spark, oracle, seed):
 
 # ---- family 15: the knn/bucket parameter space — random SRP bit widths,
 # corpus subsets, and PLANTED twin/clone structure through the SAME
-# knn_join / elect_nearest core and the parameterized _knn_join_sql twin
-# the registered queries use (they pin only the 8-bit whole-corpus
-# tuple; knn_join is the heaviest shared dependency — four registered
-# consumers plus the maintained graph state). Targets the bucket-width
-# knob (the documented 100 TB scale lever), the (cos desc, nn_id asc)
-# bigint argmax encoding under EXACT ties (planted twins: cosine is
-# exactly 1.0 in both engines), and the alone-in-bucket emit-no-row
-# rule that finer bucketings exercise. ----
+# knn_join_arrow / elect_nearest_arrow core and the parameterized
+# _knn_join_sql twin the registered queries use (they pin only the 8-bit
+# whole-corpus tuple; the election is the heaviest shared dependency —
+# four registered consumers plus the maintained graph state). Targets
+# the bucket-width knob (the documented 100 TB scale lever), the
+# (cos desc, nn_id asc) bigint argmax encoding under EXACT ties (planted
+# twins: cosine is exactly 1.0 in both engines), and the alone-in-bucket
+# emit-no-row rule that finer bucketings exercise. ----
 
 
 def _gen15(rng: random.Random) -> dict:
@@ -1517,11 +1517,7 @@ def _gen15(rng: random.Random) -> dict:
 
 @pytest.mark.parametrize("seed", range(10))
 def test_random_query15_matches_duckdb(spark, oracle, seed):
-    from sql_cdc_spark.queries.similarity_q import (
-        _knn_join_sql,
-        knn_join,
-        knn_join_arrow,
-    )
+    from sql_cdc_spark.queries.similarity_q import _knn_join_sql, knn_join_arrow
 
     rng = random.Random(43000 + seed)
     q = _gen15(rng)
@@ -1532,11 +1528,10 @@ def test_random_query15_matches_duckdb(spark, oracle, seed):
         q.update(plant="mega", mega_n=350)
     if seed == 9:
         # the forced ZERO-NORM seed (ADVICE r8): a planted all-zeros
-        # vector (0/0 cosine) must follow the SENTINEL-0 rule in all
-        # three implementations — the Arrow kernel (non-finite → 0),
-        # the exact JVM path (nanvl), and the oracle (COALESCE/NULLIF)
-        # — instead of DuckDB's bare NaN ordering ABOVE every real
-        # cosine in the DESC election
+        # vector (0/0 cosine) must follow the SENTINEL-0 rule in both
+        # the Arrow kernel (non-finite → 0) and the oracle
+        # (COALESCE/NULLIF) — instead of DuckDB's bare NaN ordering
+        # ABOVE every real cosine in the DESC election
         q.update(plant="zero")
     emb = (
         tables.load(spark, SF_DIR, "embeddings")
@@ -1612,19 +1607,38 @@ def test_random_query15_matches_duckdb(spark, oracle, seed):
             f"FROM {rel} src WHERE vec_id % {q['pmod']} = 0)"
         )
     sql = _knn_join_sql(q["n_bits"], emb_rel=rel)
-    # BOTH physical strategies against the same oracle: the exact-JVM
-    # reference and the Arrow kernel the consumers elect (r8)
-    assert_matches_oracle(knn_join(emb, n_bits=q["n_bits"]), oracle, sql)
     assert_matches_oracle(
         knn_join_arrow(emb, n_bits=q["n_bits"]), oracle, sql
     )
 
 # ---- family 16: the SemDeDup election parameter space — random SRP bit
 # widths, thresholds, corpus subsets, and planted twin/clone structure
-# through BOTH physical strategies (exact-JVM elect_dropped and the
-# Arrow kernel sim_semantic_dedup elects since r8) vs the parameterized
+# through the Arrow kernel sim_semantic_dedup elects vs the parameterized
 # DuckDB twin (_semantic_dedup_sql defaults render the registered
-# oracle byte-for-byte), plus the sweep fold's cross-strategy equality
+# oracle byte-for-byte), plus the sweep fold (max_mate_micro_arrow) vs a
+# DuckDB per-vector max computed as _semdedup_sweep_sql's pv CTE does
+
+
+def _max_mate_sql(n_bits: int, emb_rel: str) -> str:
+    """Per-vector MAX smaller-id-mate micro-cosine over ``emb_rel`` at
+    ``n_bits`` — the pv CTE of _semdedup_sweep_sql, parameterized."""
+    from sql_cdc_spark.queries.similarity_q import _lsh_sql
+
+    lsh = _lsh_sql(n_bits, emb_rel).strip()
+    v_cte = f"WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM {emb_rel})"
+    return f"""
+{v_cte},
+b AS ({lsh.replace(v_cte, '')} ),
+vb AS (SELECT v.vec_id, v.e, b.bucket FROM v JOIN b USING (vec_id))
+SELECT a.vec_id,
+       MAX(CAST(round(ROUND(COALESCE(list_dot_product(a.e, c.e)
+             / NULLIF(sqrt(list_dot_product(a.e, a.e))
+                * sqrt(list_dot_product(c.e, c.e)), 0), 0), 6) * 1000000)
+           AS BIGINT)) AS max_cm
+FROM vb a JOIN vb c ON a.bucket = c.bucket AND c.vec_id < a.vec_id
+GROUP BY a.vec_id
+ORDER BY a.vec_id
+"""
 
 
 def _gen16(rng: random.Random) -> dict:
@@ -1641,14 +1655,9 @@ def _gen16(rng: random.Random) -> dict:
 
 @pytest.mark.parametrize("seed", range(8))
 def test_random_query16_matches_duckdb(spark, oracle, seed):
-    from pyspark.sql import functions as PF
-
     from sql_cdc_spark.queries.similarity_q import (
-        _pair_cosine,
-        _salted_bucket_pairs,
         _semantic_dedup_sql,
         bucket_vectors,
-        elect_dropped,
         elect_dropped_arrow,
         max_mate_micro_arrow,
     )
@@ -1685,28 +1694,12 @@ def test_random_query16_matches_duckdb(spark, oracle, seed):
     vb = bucket_vectors(emb, q["n_bits"])
     sql = _semantic_dedup_sql(q["n_bits"], emb_rel=rel, threshold=q["threshold"])
     assert_matches_oracle(
-        elect_dropped(vb, threshold=q["threshold"]).orderBy("vec_id"),
-        oracle,
-        sql,
-    )
-    assert_matches_oracle(
         elect_dropped_arrow(vb, threshold=q["threshold"]).orderBy("vec_id"),
         oracle,
         sql,
     )
     # the sweep fold: in-kernel per-vector max mate micro-cosine must
-    # equal the salted-JVM pair fold bit-for-bit on the same bucketing
+    # equal the oracle's per-vector max bit-for-bit on the same bucketing
     kern = sorted(map(tuple, max_mate_micro_arrow(vb).collect()))
-    joined = _salted_bucket_pairs(vb, "__mate")
-    cm = PF.round(_pair_cosine() * 1_000_000).cast("long")
-    jvm = sorted(
-        map(
-            tuple,
-            joined.filter(PF.col("__mate") < PF.col("vec_id"))
-            .select("vec_id", cm.alias("cm"))
-            .groupBy("vec_id")
-            .agg(PF.max("cm").alias("max_cm"))
-            .collect(),
-        )
-    )
-    assert kern == jvm
+    duck = oracle.execute(_max_mate_sql(q["n_bits"], rel)).fetchall()
+    assert kern == duck and kern

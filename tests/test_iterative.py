@@ -16,9 +16,9 @@ from tests.conftest import SF_DIR_SMALL
 
 def _nn_edges(spark):
     """The symmetrized top-1-NN edge set sim_pagerank_step builds."""
-    from sql_cdc_spark.queries.similarity_q import knn_join
+    from sql_cdc_spark.queries.similarity_q import knn_join_arrow
 
-    best = knn_join(tables.load(spark, SF_DIR_SMALL, "embeddings"))
+    best = knn_join_arrow(tables.load(spark, SF_DIR_SMALL, "embeddings"))
     return (
         best.select(
             F.least("vec_id", "nn_id").alias("id_a"),

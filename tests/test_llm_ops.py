@@ -920,19 +920,23 @@ def test_duplicate_spans_finds_planted_shared_passage(spark):
 
 
 @pytest.mark.slow
-def test_knn_join_arrow_bit_equal_to_exact_jvm(spark):
-    """The Arrow/BLAS election must be BIT-EQUAL to the exact-JVM
-    knn_join — same L2R double summation, same HALF_UP 6-dp rounding,
-    same (cos, −id) tie encoding — across planted twin/clone structure
-    (twins: cosine exactly 1.0, the tie case) and coarse-to-fine
-    bucketings (coarse = big buckets exercise the in-kernel query
-    blocking; fine = alone-in-bucket emits nothing)."""
+def test_knn_join_arrow_bit_equal_to_oracle_on_planted_grid(spark, oracle):
+    """The Arrow/BLAS election must be BIT-EQUAL to the DuckDB oracle
+    (_knn_join_sql) — same L2R double summation, same HALF_UP 6-dp
+    rounding, same (cos desc, id asc) tie rule — across planted
+    twin/clone structure (twins: cosine exactly 1.0, the tie case) and
+    coarse-to-fine bucketings (coarse = big buckets exercise the
+    in-kernel query blocking; fine = alone-in-bucket emits nothing)."""
     from pyspark.sql import functions as F
 
-    from sql_cdc_spark.queries.similarity_q import knn_join, knn_join_arrow
+    from sql_cdc_spark.queries.similarity_q import _knn_join_sql, knn_join_arrow
 
     emb = tables.load(spark, SF_DIR_SMALL, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    base = (
+        "(SELECT vec_id, embedding::DOUBLE[] AS embedding "
+        f"FROM '{SF_DIR_SMALL}/embeddings.parquet')"
     )
     for f in (1.0, 1.01):
         planted = emb.filter(F.col("vec_id") % 3 == 0).select(
@@ -942,10 +946,16 @@ def test_knn_join_arrow_bit_equal_to_exact_jvm(spark):
             ).alias("embedding"),
         )
         big = emb.unionByName(planted)
+        rel = (
+            f"(SELECT * FROM {base} b UNION ALL "
+            "SELECT vec_id + 1000000 AS vec_id, "
+            f"list_transform(embedding, x -> x * {f}) AS embedding "
+            f"FROM {base} src WHERE vec_id % 3 = 0)"
+        )
         for bits in (4, 8, 10):
             a = sorted(map(tuple, knn_join_arrow(big, n_bits=bits).collect()))
-            b = sorted(map(tuple, knn_join(big, n_bits=bits).collect()))
-            assert a == b, f"arrow != exact at f={f} bits={bits}"
+            b = sorted(oracle.execute(_knn_join_sql(bits, emb_rel=rel)).fetchall())
+            assert a == b, f"arrow != oracle at f={f} bits={bits}"
             assert a, "degenerate: no pairs elected"
 
 
@@ -1370,13 +1380,16 @@ def test_source_overlap_exact_pair_math(spark):
 
 
 def test_knn_join_matches_oracle(spark, oracle):
-    """Oracle-parity gate for sim_knn_join ahead of its round-5
-    driver-window entry — the driver comparison at sf0.01 (431 vectors
-    share a bucket there, so the gate is far from vacuous)."""
-    from sql_cdc_spark.queries.similarity_q import _knn_join_sql, sim_knn_join
+    """Oracle-parity gate for sim_knn_join_arrow — the driver comparison
+    at sf0.01 (431 vectors share a bucket there, so the gate is far from
+    vacuous)."""
+    from sql_cdc_spark.queries.similarity_q import (
+        _knn_join_sql,
+        sim_knn_join_arrow,
+    )
     from tests.conftest import SF_DIR, assert_matches_oracle
 
-    df = sim_knn_join(spark, SF_DIR)
+    df = sim_knn_join_arrow(spark, SF_DIR)
     assert_matches_oracle(df, oracle, _knn_join_sql())
     assert df.count() >= 100
 
@@ -1386,7 +1399,7 @@ def test_knn_join_planted_twin_and_bucket_locality(spark):
     bucket by construction, so each must pick the other at cos_sim 1.0.
     And every reported neighbor really lives in its probe's bucket."""
     from sql_cdc_spark.functions.similarity import lsh_bucket
-    from sql_cdc_spark.queries.similarity_q import DIM, LSH_BITS, knn_join
+    from sql_cdc_spark.queries.similarity_q import DIM, LSH_BITS, knn_join_arrow
 
     emb = tables.load(spark, SF_DIR_SMALL, "embeddings").select(
         "vec_id", "embedding"
@@ -1395,7 +1408,10 @@ def test_knn_join_planted_twin_and_bucket_locality(spark):
         F.lit(90_000).cast("long").alias("vec_id"), "embedding"
     )
     planted = emb.unionByName(twin)
-    got = {r.vec_id: (r.nn_id, r.cos_sim) for r in knn_join(planted).collect()}
+    got = {
+        r.vec_id: (r.nn_id, r.cos_sim)
+        for r in knn_join_arrow(planted).collect()
+    }
     assert got[0] == (90_000, 1.0)
     assert got[90_000] == (0, 1.0)
     buckets = {

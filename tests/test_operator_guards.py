@@ -433,7 +433,7 @@ REGISTRY_FROZEN_PRE_R9 = {
     "rel_unpivot_measures", "scl_bloom_pruned_join", "scl_group_zscore",
     "scl_salted_join_segments", "scl_salted_pricing", "scl_zorder_key",
     "sim_bucketed_topk", "sim_centroid_assign", "sim_embedding_quantize",
-    "sim_ivf_topk", "sim_knn_join", "sim_label_centroids",
+    "sim_ivf_topk", "sim_label_centroids",
     "sim_lsh_buckets", "sim_multiprobe_topk", "sim_norm_stats",
     "sim_pq_topk", "sim_quantized_topk", "sim_random_projection",
     "sim_semantic_dedup", "sim_topk_cosine", "tpch_q10_returned_items",
@@ -472,3 +472,26 @@ def test_every_new_registration_sits_in_the_driver_window():
     # and the frozen set never references a name the registry dropped
     dropped = [n for n in REGISTRY_FROZEN_PRE_R9 if n not in reg]
     assert not dropped, f"frozen names no longer registered: {dropped}"
+
+
+def test_no_two_registered_queries_share_an_oracle():
+    """One elected implementation per query: two registry names on the
+    same oracle text are two strategies for one answer, so the second
+    belongs in a test, not the registry. The one exception is SCD2,
+    whose incremental merge must equal the full history build by
+    design."""
+    from collections import defaultdict
+
+    from sql_cdc_spark.queries import _registry
+
+    by_oracle = defaultdict(list)
+    for name, entry in _registry().items():
+        if entry.oracle is not None:
+            by_oracle[entry.oracle].append(name)
+    shared = [
+        sorted(names)
+        for names in by_oracle.values()
+        if len(names) > 1
+        and set(names) != {"cdc_scd2_history", "cdc_scd2_incremental"}
+    ]
+    assert not shared, f"registry names sharing one oracle: {shared}"

@@ -21,7 +21,7 @@ def _plan(spark, name: str) -> str:
 def registry_plans(spark) -> dict[str, str]:
     """Extended explain for EVERY registry query, built ONCE per module
     (r10, VERDICT r9 #1): the two whole-registry sweeps below each paid
-    their own 192-query plan-build pass (~73 s each in the r9 gate);
+    their own 191-query plan-build pass (~73 s each in the r9 gate);
     sharing one pass keeps both guards in the driver core gate at a
     third of the cost."""
     spark.catalog.clearCache()
@@ -38,13 +38,13 @@ _PANDAS_OK = {
     "mm_audio_features",
     "scl_group_zscore",
     "fn_bson_roundtrip",
-    # the bit-identical Arrow/BLAS knn election (grouped-map kernel —
-    # the documented HOF-per-pair escape hatch, r7)
+    # the Arrow/BLAS knn election (grouped-map kernel — the documented
+    # HOF-per-pair escape hatch, r7)
     "sim_knn_join_arrow",
-    # r8 (VERDICT r7 #1): every knn/SemDeDup consumer elects the Arrow
-    # kernel strategy — bit-equal to the exact JVM paths by test, 13.7×
-    # at the 100× point; presence of the kernel in these plans is
-    # itself asserted by test_knn_consumers_elect_arrow_kernel
+    # every knn/SemDeDup consumer runs the Arrow kernel, the one
+    # election strategy (bit-equal to the DuckDB oracles, fuzz families
+    # 15/16); presence of the kernel in these plans is itself asserted
+    # by test_knn_consumers_elect_arrow_kernel
     "sim_pagerank_fixed3",
     "sim_pagerank_step",
     "sim_mutual_knn",
@@ -103,9 +103,8 @@ def test_shingle_consumers_elect_arrow_kernel(spark):
 
 def test_knn_consumers_elect_arrow_kernel(spark):
     """VERDICT r7 #1 done-criterion: the knn/SemDeDup consumers must
-    PLAN the grouped-map Arrow kernel in their knn subtree (the exact
-    HOF-fold path measured 13.7× slower at 100× stays available as
-    knn_join/elect_nearest, the cross-engine reference)."""
+    PLAN the grouped-map Arrow kernel in their knn subtree — the one
+    election strategy; the DuckDB oracles are the reference."""
     for name in (
         "sim_knn_join_arrow",
         "sim_pagerank_fixed3",
@@ -479,7 +478,7 @@ HEADLINE_EXCHANGE_BUDGETS = {
     # probe/ref distincts + pinned shuffle-hash anti join + two
     # per-doc aggs + final join/sort
     "txt_ngram_novelty": 6,
-    "sim_mutual_knn": 4,        # knn_join shape + ONE reciprocity agg
+    "sim_mutual_knn": 4,        # knn election shape + ONE reciprocity agg
     "sim_kmeans_step": 2,       # scan-local assignment; K-group agg + sort
     # EXECUTED shape: the corpus-scale LM pipeline runs ONCE into the
     # session-cached |domains|-row aggregate; ref/weight branches read
@@ -497,7 +496,7 @@ HEADLINE_EXCHANGE_BUDGETS = {
     # shingle subtree renders per scan like the other persist users
     "dd_lsh_recall_eval": 22,  # re-pinned r10 (measured 21)
     "rel_grouping_sets": 2,     # ONE expand+agg pass + presentation sort
-    # EXECUTED shape: ONE knn_join pass into the undirected-edge agg,
+    # EXECUTED shape: ONE knn election pass into the undirected-edge agg,
     # then degree agg + pinned shuffle-hash contribution join + inflow
     # agg + rank join + top-k; the PRINTED count re-renders the shared
     # knn/edge subtree per consumer (ReuseExchange dedupes at runtime)
@@ -673,7 +672,6 @@ R5_QUEUED_EXCHANGE_BUDGETS = {
     # r10: near side reads the cached family shingle frame (was 35);
     # measured 26 at sf0.01
     "dd_source_overlap": 27,
-    "sim_knn_join": 3,              # bucket self-join + argmax agg + orderBy
     "evt_rolling_actives": 7,       # two distincts + two aggs + join + sort
     "evt_props_topk": 3,            # (type,k) agg + rank window + orderBy
     "txt_quality_gate": 3,          # histogram agg + lang window + final agg
@@ -708,10 +706,7 @@ def test_r5_queued_exchange_budgets(spark):
         evt_rolling_actives,
     )
     from sql_cdc_spark.queries.relational_q import rel_topn_other_rollup
-    from sql_cdc_spark.queries.similarity_q import (
-        sim_knn_join,
-        sim_semantic_dedup,
-    )
+    from sql_cdc_spark.queries.similarity_q import sim_semantic_dedup
     from sql_cdc_spark.queries.text_q import txt_quality_gate
 
     fns = {
@@ -720,7 +715,6 @@ def test_r5_queued_exchange_budgets(spark):
         "rel_topn_other_rollup": rel_topn_other_rollup,
         "evt_collapse_runs": evt_collapse_runs,
         "dd_source_overlap": dd_source_overlap,
-        "sim_knn_join": sim_knn_join,
         "evt_rolling_actives": evt_rolling_actives,
         "evt_props_topk": evt_props_topk,
         "txt_quality_gate": txt_quality_gate,

@@ -14,7 +14,7 @@ ROWS_ONLY_CASES = sorted(name for name, e in REG.items() if e.oracle is None)
 # r10 tiering (VERDICT r9 #1): the driver core gate runs the CORE slice
 # of the oracle sweep — every query CHANGED in the current round (the
 # changed⇒checked invariant, gated fast and locally) plus one
-# representative per domain family; the full 192-query parametrization
+# representative per domain family; the full 191-query parametrization
 # stays in the slow tier (`-m "slow or not slow"`), which the builder
 # runs before every round lands.
 CORE_ORACLE = {
@@ -828,16 +828,16 @@ def test_compaction_plan_invariants(spark, oracle):
 
 def test_mutual_knn_is_reciprocal_subset(spark):
     """Every mutual edge must appear in BOTH directions of the directed
-    knn_join result with the same cosine, and directed edges without a
+    knn result with the same cosine, and directed edges without a
     reciprocal must be absent."""
     from sql_cdc_spark.queries.similarity_q import (
-        sim_knn_join,
+        sim_knn_join_arrow,
         sim_mutual_knn,
     )
 
     directed = {
         (r.vec_id, r.nn_id): r.cos_sim
-        for r in sim_knn_join(spark, SF_DIR).collect()
+        for r in sim_knn_join_arrow(spark, SF_DIR).collect()
     }
     mutual = sim_mutual_knn(spark, SF_DIR).collect()
     assert mutual
@@ -986,11 +986,11 @@ def test_pagerank_step_matches_python_recompute(spark):
     from sql_cdc_spark.queries.similarity_q import (
         PR_RANK_UNIT,
         PR_TOPN,
-        sim_knn_join,
+        sim_knn_join_arrow,
         sim_pagerank_step,
     )
 
-    directed_raw = sim_knn_join(spark, SF_DIR).collect()
+    directed_raw = sim_knn_join_arrow(spark, SF_DIR).collect()
     und = {
         (min(r.vec_id, r.nn_id), max(r.vec_id, r.nn_id)) for r in directed_raw
     }

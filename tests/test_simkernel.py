@@ -91,9 +91,9 @@ def test_round_micro_half_up_matches_bigdecimal_reference():
 
 def test_round_micro_matches_spark_round_on_knife_edges(spark):
     """The same crafted values through the ACTUAL JVM double-round
-    sequence (F.round(x, 6) then F.round(·×1e6) — the elect_nearest
-    expression) must equal the kernel's integers — the parity is with
-    Spark itself, not just our BigDecimal model of it."""
+    sequence (F.round(x, 6) then F.round(·×1e6)) must equal the
+    kernel's integers — the parity is with Spark itself, not just our
+    BigDecimal model of it."""
     from pyspark.sql import functions as F
 
     vals = []
@@ -123,8 +123,7 @@ def test_round_micro_matches_spark_round_on_knife_edges(spark):
 def test_zero_norm_vector_pins_cosine_sentinel_zero(spark):
     """A zero-norm embedding's cosines are 0/0; the kernel pins them to
     0 (ADVICE r7) and still elects deterministically — smallest mate id
-    on the all-tie. (The exact-JVM path raises CAST_OVERFLOW under ANSI
-    on the same input, so the kernel is the defined behavior.)"""
+    on the all-tie, as the oracles' NULLIF/COALESCE guard does."""
     from sql_cdc_spark.queries.similarity_q import (
         elect_dropped_arrow,
         elect_nearest_arrow,

@@ -3317,7 +3317,7 @@ def test_streaming_passage_maintenance_equals_full_recompute(spark, tmp_path):
 
 def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
     """Stream-equals-batch for the k-NN graph: the state built from the
-    full embeddings table holds EXACTLY the registered sim_knn_join
+    full embeddings table holds EXACTLY the registered sim_knn_join_arrow
     rows; draining an embedding change feed ends at exactly the top-1
     table a full rebuild of the final corpus produces. The fixture
     engineers the two cases row-level patching misses: deleting a
@@ -3326,7 +3326,7 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
     best rows throughout its bucket at cosine 1.0). The served mutual
     edge set matches the fold over the rebuilt table; replaying the last
     batch is a no-op."""
-    from sql_cdc_spark.queries.similarity_q import sim_knn_join
+    from sql_cdc_spark.queries.similarity_q import sim_knn_join_arrow
     from sql_cdc_spark.streaming import knn_maintenance as KM
 
     emb = tables.load(spark, SF_DIR_SMALL, "embeddings").select(
@@ -3335,7 +3335,7 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
     state0 = KM.build_knn_state(emb)
     assert {
         (r.vec_id, r.nn_id, r.cos_sim) for r in state0.best.collect()
-    } == {tuple(r) for r in sim_knn_join(spark, SF_DIR_SMALL).collect()}
+    } == {tuple(r) for r in sim_knn_join_arrow(spark, SF_DIR_SMALL).collect()}
     state0.release()
 
     base = emb.orderBy("vec_id").limit(80)
@@ -3419,12 +3419,16 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
 def test_incremental_graph_analytics_end_to_end(spark, tmp_path):
     """Composed capstone for the graph family: an embedding change feed
     drives the maintained k-NN state, and the FULL PageRank run over
-    mutual edges served from that state equals the batch path (knn_join
-    on the final corpus → the same fold → the same loop) node-for-node.
+    mutual edges served from that state equals the batch path
+    (knn_join_arrow on the final corpus → the same fold → the same
+    loop) node-for-node.
     The RAG-index analog for graph analytics: no batch recompute of the
     neighbor table anywhere on the streaming side."""
     from sql_cdc_spark.operators.iterative import pagerank
-    from sql_cdc_spark.queries.similarity_q import knn_join, undirected_edges
+    from sql_cdc_spark.queries.similarity_q import (
+        knn_join_arrow,
+        undirected_edges,
+    )
     from sql_cdc_spark.streaming import knn_maintenance as KM
 
     emb = tables.load(spark, SF_DIR_SMALL, "embeddings").select(
@@ -3454,7 +3458,7 @@ def test_incremental_graph_analytics_end_to_end(spark, tmp_path):
     )
     edges_stream = KM.mutual_edges_from_state(final).select("id_a", "id_b")
     edges_batch = (
-        undirected_edges(knn_join(final_corpus))
+        undirected_edges(knn_join_arrow(final_corpus))
         .filter(F.col("__n") == 2)
         .select("id_a", "id_b")
     )
