@@ -48,7 +48,7 @@ def keyset_filter(
     last_key: int,
     version_col: str = "change_version",
     key_col: str = "key_id",
-) -> Column | DataFrame:
+) -> DataFrame:
     """Composite keyset-cursor filter: resume-safe de-dup across batch
     boundaries — keep rows strictly after cursor ``(version, key)``:
     ``ver > since OR (ver == since AND key > last_key)``.
@@ -57,11 +57,8 @@ def keyset_filter(
     of server.js:134 it suppresses duplicates under version ties). O(1)
     resume: the predicate prunes at the scan, no OFFSET-style skip.
     """
-    v, k = F.col(version_col), F.col(key_col)
-    return df.filter(
-        (v > F.lit(since_version))
-        | ((v == F.lit(since_version)) & (k > F.lit(last_key)))
-    )
+    v, k, since = f"`{version_col}`", f"`{key_col}`", int(since_version)
+    return df.where(f"{v} > {since} OR ({v} = {since} AND {k} > {int(last_key)})")
 
 
 def latest_per_key(
@@ -125,10 +122,7 @@ def bounded_ordered_batch(
     Spark plans orderBy+limit as TakeOrderedAndProject: each partition
     keeps a local top-k heap, only k rows per partition reach the driver —
     no global sort even at 100 TB."""
-    order = [F.col(version_col).asc()]
-    if key_col:
-        order.append(F.col(key_col).asc())
-    return df.orderBy(*order).limit(limit)
+    return df.orderBy(version_col, *([key_col] if key_col else [])).limit(limit)
 
 
 def apply_changes_to_replica(

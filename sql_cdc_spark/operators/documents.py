@@ -29,10 +29,9 @@ def nest_lines(
     """Aggregate each key's lines into a deterministic (sorted) array of
     structs. ``order_col`` must be first in ``line_cols`` so array_sort's
     lexicographic struct ordering sorts by it."""
-    cols = [order_col] + [c for c in line_cols if c != order_col]
-    struct_col = F.struct(*[F.col(c) for c in cols])
+    cols = ", ".join(f"`{c}`" for c in [order_col] + [c for c in line_cols if c != order_col])
     return lines.groupBy(key_col).agg(
-        F.array_sort(F.collect_list(struct_col)).alias(array_col)
+        F.expr(f"array_sort(collect_list(struct({cols}))) AS `{array_col}`")
     )
 
 
@@ -63,9 +62,7 @@ def assemble_documents(
     doc = header.select(key_col, *[c for c in header_cols if c != key_col]).join(
         nested, key_col, "left"
     )
-    return doc.withColumn(
-        array_col, F.coalesce(F.col(array_col), F.array().cast(nested.schema[array_col].dataType))
-    )
+    return doc.withColumn(array_col, F.expr(f"coalesce(`{array_col}`, array())"))
 
 
 def documents_to_json(doc: DataFrame, array_col: str = "lines") -> DataFrame:
@@ -73,4 +70,4 @@ def documents_to_json(doc: DataFrame, array_col: str = "lines") -> DataFrame:
     equivalent of the reference's FOR JSON PATH + BSON.serialize
     (sqls/storedprocedure.sql:51, invoice-api/server.js:69). JSON is the
     Spark-native document codec; BSON byte-parity would be a Python UDF."""
-    return doc.withColumn("doc_json", F.to_json(F.struct(*doc.columns)))
+    return doc.withColumn("doc_json", F.expr("to_json(struct(*))"))

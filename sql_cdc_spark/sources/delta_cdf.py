@@ -16,8 +16,9 @@ tested on in-memory frames with the CDF column contract
 (tests/test_sources.py).
 
 At scale: version-bounded reads prune Delta's commit log to the
-requested range (the partition-pruned analog of read_changelog_range),
-and the normalization is scan-side column algebra — no shuffle.
+requested range (the analog of ``changelog.read_changelog``'s
+version-bucket pruning), and the normalization is scan-side column
+algebra — no shuffle.
 """
 
 from __future__ import annotations

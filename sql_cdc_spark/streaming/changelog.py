@@ -85,17 +85,16 @@ class ChangeLogWriter:
 VERSION_BUCKET_SIZE = 10_000
 
 
-def write_changelog_partitioned(
-    changes: DataFrame, log_dir: str, bucket_size: int = VERSION_BUCKET_SIZE
-) -> None:
+def write_changelog_partitioned(changes: DataFrame, log_dir: str) -> None:
     """Append change rows under `version_bucket=N/` directories
-    (N = change_version // bucket_size) — the at-scale layout SURVEY.md §
-    prescribes: version predicates become partition pruning, so an
-    incremental pull from version v touches only ⌈(hw−v)/bucket⌉
-    directories of a log holding years of history."""
+    (N = change_version // VERSION_BUCKET_SIZE) — the at-scale layout
+    SURVEY.md § prescribes: version predicates become partition pruning,
+    so an incremental pull from version v touches only
+    ⌈(hw−v)/bucket⌉ directories of a log holding years of history."""
     (
         changes.withColumn(
-            "version_bucket", (F.col("change_version") / bucket_size).cast("long")
+            "version_bucket",
+            (F.col("change_version") / VERSION_BUCKET_SIZE).cast("long"),
         )
         .write.mode("append")
         .partitionBy("version_bucket")
@@ -103,10 +102,16 @@ def write_changelog_partitioned(
     )
 
 
-def read_changelog(spark: SparkSession, log_dir: str) -> DataFrame:
-    """Batch view of the change log. Handles both the flat test-harness
-    layout and the partitioned `version_bucket=` layout (the partition
-    column is dropped after read — pruning has already happened).
+def read_changelog(spark: SparkSession, log_dir: str, since_version: int = 0) -> DataFrame:
+    """Batch view of the change rows at ``change_version >= since_version``.
+    Handles both the flat test-harness layout and the partitioned
+    `version_bucket=` layout: on the latter the version bound is also
+    applied to the bucket column before it is dropped, so the scan prunes
+    to the buckets that can hold such rows (PartitionFilters in the plan).
+
+    The file listing is taken here, once: every scan of the returned
+    DataFrame reads exactly the files present at this call, so a caller
+    that builds its plan from one read sees one snapshot of the log.
 
     Cold start: a consumer can come up before the producer has written a
     single change — a missing log dir is created empty (schema'd read of
@@ -117,32 +122,10 @@ def read_changelog(spark: SparkSession, log_dir: str) -> DataFrame:
     ensure_dir(spark, log_dir)
     df = spark.read.schema(CHANGELOG_SCHEMA).parquet(log_dir)
     if "version_bucket" in df.columns:
-        df = df.drop("version_bucket")
-    return df
-
-
-def read_changelog_range(
-    spark: SparkSession,
-    log_dir: str,
-    since_exclusive: int,
-    until_inclusive: int,
-    bucket_size: int = VERSION_BUCKET_SIZE,
-) -> DataFrame:
-    """Bounded change scan over a partitioned log: the version range is
-    translated to a version_bucket range so the scan prunes to the
-    matching directories (visible as PartitionFilters in the plan), then
-    exact row-level predicates apply within them. Falls back to plain
-    row-level filtering on a flat log."""
-    df = spark.read.parquet(log_dir)
-    if "version_bucket" in df.columns:
-        df = df.filter(
-            (F.col("version_bucket") >= since_exclusive // bucket_size)
-            & (F.col("version_bucket") <= until_inclusive // bucket_size)
+        df = df.where(
+            f"version_bucket >= {int(since_version) // VERSION_BUCKET_SIZE}"
         ).drop("version_bucket")
-    return df.filter(
-        (F.col("change_version") > since_exclusive)
-        & (F.col("change_version") <= until_inclusive)
-    )
+    return df.where(f"change_version >= {int(since_version)}")
 
 
 def read_changelog_stream(spark: SparkSession, log_dir: str) -> DataFrame:
@@ -156,7 +139,10 @@ def read_changelog_stream(spark: SparkSession, log_dir: str) -> DataFrame:
 
 def current_version(spark: SparkSession, log_dir: str) -> int:
     """CHANGE_TRACKING_CURRENT_VERSION() analog (sqls/storedprocedure.sql:11-12):
-    the high watermark used to snapshot-bound a pull."""
+    the log's high watermark, by a scan of the whole log. For callers and
+    operators that want the number; ``pipeline.pull_batch`` does not call
+    it — its snapshot is its own listing of the log, and its watermark is
+    computed inside the pull's one action over the rows it read."""
     row = read_changelog(spark, log_dir).agg(F.max("change_version")).first()
     return row[0] or 0
 

@@ -5,7 +5,10 @@ sqls/storedprocedure.sql:4-57) rebuilt two ways:
 1. ``pull_batch`` — the exact reference semantics: checkpointed,
    resumable, multi-consumer incremental pull with a composite keyset
    cursor, snapshot-bounded scan, inclusive re-read + dedup, bounded
-   ordered batch, per-document sink, advance-only-on-success.
+   ordered batch, per-document sink, advance-only-on-success. A pull over
+   a parquet log lists the log once (that listing is its snapshot) and
+   runs ONE Spark action, which writes the documents and returns the
+   counts the cursor advance needs.
 2. ``run_available_now`` — the idiomatic Spark shape: Structured
    Streaming over the change log with foreachBatch + checkpointLocation;
    offsets replace the hand-rolled cursor, idempotent (deterministically
@@ -58,6 +61,8 @@ class BatchResult:
     has_more: bool
     last_version: int = 0
     last_id: int = 0
+    # read_state, pull (snapshot, query, assembly and sink: the one
+    # action), update_state
     stage_ms: dict[str, float] = field(default_factory=dict)
     docs_per_second: float = 0.0
 
@@ -68,15 +73,14 @@ def _changed_invoices(
     """(invoice_id, change_version, op) for every change row: header rows
     pass through; line rows recover the invoice key by joining the base
     line table on the line PK (sqls/storedprocedure.sql:14-26)."""
-    header_changes = changes.filter(F.col("table_name") == cl.HEADER_TABLE).select(
-        F.col("key_id").alias("invoice_id"), "change_version", "op"
+    header_changes = changes.where(f"table_name = '{cl.HEADER_TABLE}'").selectExpr(
+        "key_id AS invoice_id", "change_version", "op"
     )
-    line_changes = changes.filter(F.col("table_name") == cl.LINE_TABLE).select(
-        F.col("key_id").alias("line_id"), "change_version", "op"
+    line_changes = changes.where(f"table_name = '{cl.LINE_TABLE}'").selectExpr(
+        "key_id AS line_id", "change_version", "op"
     )
-    lines_keyed = lines.select(
-        F.expr(model.line_key_expr).alias("line_id"),
-        F.col(model.line_parent_key).alias("invoice_id"),
+    lines_keyed = lines.selectExpr(
+        f"{model.line_key_expr} AS line_id", f"`{model.line_parent_key}` AS invoice_id"
     )
     recovered = line_changes.join(lines_keyed, "line_id", "inner").select(
         "invoice_id", "change_version", "op"
@@ -88,8 +92,8 @@ def _latest_with_op(changed: DataFrame) -> DataFrame:
     """A1 carrying the op of the winning version: max(struct(version, op))
     per invoice — one map-side-combining aggregation."""
     return changed.groupBy("invoice_id").agg(
-        F.max(F.struct("change_version", "op")).alias("__m")
-    ).select("invoice_id", F.col("__m.change_version").alias("change_version"), F.col("__m.op").alias("op"))
+        F.expr("max(struct(change_version, op)) AS __m")
+    ).selectExpr("invoice_id", "__m.change_version AS change_version", "__m.op AS op")
 
 
 def _assemble(header: DataFrame, lines: DataFrame, latest: DataFrame, model: InvoiceModel) -> DataFrame:
@@ -114,11 +118,9 @@ def _assemble(header: DataFrame, lines: DataFrame, latest: DataFrame, model: Inv
     docs = documents_to_json(docs)
     return docs.withColumn(
         "doc_filename",
-        F.concat(
-            F.col("invoice_id").cast("string"),
-            F.lit("_v"),
-            F.col("change_version").cast("string"),
-            F.lit(".json"),
+        F.expr(
+            "concat(CAST(invoice_id AS STRING), '_v', "
+            "CAST(change_version AS STRING), '.json')"
         ),
     )
 
@@ -174,18 +176,31 @@ def _segregate_error(error_dir: str, fname: str, payload, exc: Exception) -> Non
     )
 
 
+def _write_json(out_dir: str, fname: str, js) -> None:
+    _atomic_write(os.path.join(out_dir, fname), js)
+
+
+def _write_bson(out_dir: str, fname: str, js) -> None:
+    from sql_cdc_spark.functions import bsoncodec
+
+    fname = fname.removesuffix(".json") + ".bson"
+    data = bsoncodec.encode_document(json.loads(js))
+    _atomic_write(os.path.join(out_dir, fname), data, mode="wb")
+
+
 def _per_record_sink(
     docs: DataFrame, out_dir: str, error_dir: str | None, write_one
-) -> int:
+) -> DataFrame:
     """Shared partition-parallel per-record sink core (Arrow batches via
-    mapInPandas — no pickled-Row traffic). ``write_one(fname, payload)``
-    does the format-specific write. With ``error_dir`` set, a record
-    whose write raises is segregated there and the batch CONTINUES;
-    without it, the exception propagates and fails the batch (the
-    pre-round-4 behavior). Each task reports delivered/errored counts so
-    the advance-only-on-success guard sees true totals."""
+    mapInPandas — no pickled-Row traffic), built lazily: it returns a
+    DataFrame of one ``(n, n_err)`` delivered/errored row per task, and
+    the documents are written by whichever action computes it.
+    ``write_one(out_dir, fname, payload)`` does the format-specific write.
+    With ``error_dir`` set, a record whose write raises is segregated
+    there and the batch CONTINUES; without it, the exception propagates
+    and fails the action. Each task reports its counts, so the
+    advance-only-on-success guard sees true totals."""
     os.makedirs(out_dir, exist_ok=True)
-    payload = docs.select("doc_filename", "doc_json")
 
     def _write_batches(batches):
         import pandas as pd
@@ -194,7 +209,7 @@ def _per_record_sink(
         for pdf in batches:
             for fname, js in zip(pdf["doc_filename"], pdf["doc_json"]):
                 try:
-                    write_one(fname, js)
+                    write_one(out_dir, fname, js)
                     n += 1
                 except Exception as exc:  # noqa: BLE001 — segregation path
                     if error_dir is None:
@@ -203,12 +218,14 @@ def _per_record_sink(
                     n_err += 1
         yield pd.DataFrame({"n": [n], "n_err": [n_err]})
 
-    counts = (
-        payload.mapInPandas(_write_batches, "n long, n_err long")
-        .agg(F.sum("n").alias("n"), F.sum("n_err").alias("n_err"))
-        .first()
+    return docs.select("doc_filename", "doc_json").mapInPandas(
+        _write_batches, "n long, n_err long"
     )
-    return int(counts.n or 0)
+
+
+def _delivered(counts: DataFrame) -> int:
+    """Run a sink's counts DataFrame; returns the documents delivered."""
+    return sum(r.n for r in counts.collect())
 
 
 def write_documents(
@@ -222,11 +239,7 @@ def write_documents(
     the full batch — an errored record is consumed, its evidence parked
     for operator replay. Returns the number of documents DELIVERED
     (excluding segregated errors)."""
-
-    def _write_one(fname: str, js) -> None:
-        _atomic_write(os.path.join(out_dir, fname), js)
-
-    return _per_record_sink(docs, out_dir, error_dir, _write_one)
+    return _delivered(_per_record_sink(docs, out_dir, error_dir, _write_json))
 
 
 def write_documents_partitioned(docs: DataFrame, out_dir: str, batch_id: int) -> int:
@@ -251,6 +264,26 @@ class StaleCursorError(RuntimeError):
     retention window), surfaced as an error instead of silent loss."""
 
 
+WATERMARK_METRIC = "pull_watermark"
+
+
+def _snapshot(spark: SparkSession, log_dir: str | DataFrame, since: int) -> DataFrame:
+    """The change rows at versions >= ``since`` that one pull reads — the
+    only step of the pull that differs by source.
+
+    A parquet log is listed once, by ``read_changelog``: that listing is
+    the snapshot, every scan in the pull's plan reads exactly its files,
+    and a file appended after it is left whole to the next pull. A
+    DataFrame source (a JDBC or Kafka-shaped read) is re-queried by every
+    scan, so only a bound makes its scans agree: it is bounded up front by
+    its current ``max(change_version)``."""
+    if not isinstance(log_dir, DataFrame):
+        return cl.read_changelog(spark, log_dir, since)
+    changes = log_dir.where(f"change_version >= {since}")
+    bound = changes.agg(F.max("change_version")).first()[0]
+    return changes.where(f"change_version <= {since if bound is None else bound}")
+
+
 def pull_batch(
     spark: SparkSession,
     log_dir: str | DataFrame,
@@ -266,28 +299,39 @@ def pull_batch(
     """One checkpointed incremental pull (invoice-api/server.js:83-365):
 
     1. read consumer cursor (auto-create)              server.js:100-125
-    2. snapshot watermark = current version            storedprocedure.sql:11-12
+    2. snapshot the log from the cursor version        storedprocedure.sql:11-12
     3. inclusive re-scan from last_sync_version        server.js:134
-    4. collapse to latest-per-invoice ≤ watermark      storedprocedure.sql:14-34
+    4. collapse to latest-per-invoice                  storedprocedure.sql:14-34
     5. composite keyset filter (version, invoice)      server.js:165-168
     6. bounded ordered batch                           storedprocedure.sql:35,56
     7. assemble + write documents (idempotent names)   server.js:183-203
     8. advance cursor only if sink succeeded           server.js:231-249
 
-    The bounded batch is cached, and unpersisted on every way out, a sink
-    or cursor failure included.
+    Steps 3-7 are ONE Spark action. It writes the documents and returns
+    the sink's counts and the pre-join batch's ``(count, last (version,
+    invoice))``; the snapshot's high watermark (``to_version``; the cursor
+    version when the snapshot is empty) is observed on the same action's
+    scans of the log. The cursor advances from that result, after the
+    action has returned.
+
+    The snapshot rule: a parquet log is listed once per pull, and that
+    listing is the snapshot — a change file appended after it is neither
+    delivered nor skipped by this pull, and the next pull delivers it.
 
     ``log_dir`` is a parquet log directory, OR a ready changelog
     DataFrame in the same (table_name, key_id, change_version, op, …)
     convention — e.g. a partitioned JDBC read of the change-tracking
     table living in an RDBMS (sources/jdbc.py), the reference's literal
-    deployment. A DataFrame source has no retention marker; its
-    retention contract belongs to the backing store.
+    deployment. Every scan re-queries such a source, so it is bounded up
+    front by its current max(change_version) (one extra job). A DataFrame
+    source has no retention marker; its retention contract belongs to the
+    backing store.
     """
     t0 = time.time()
     stage_ms: dict[str, float] = {}
 
     state = registry.read(consumer)
+    since, since_id = state.last_sync_version, state.last_processed_id
     stage_ms["read_state"] = (time.time() - t0) * 1000
 
     # validity gate (server-side min-valid-version check): the inclusive
@@ -295,36 +339,23 @@ def pull_batch(
     # a cursor below the floor means expired, unconsumed changes, and
     # advancing past them would be silent data loss
     floor = 0 if isinstance(log_dir, DataFrame) else cl.retention_floor(log_dir)
-    if floor and state.last_sync_version < floor:
+    if floor and since < floor:
         raise StaleCursorError(
             f"consumer {consumer!r} cursor version "
-            f"{state.last_sync_version} predates the retention floor "
+            f"{since} predates the retention floor "
             f"{floor}; reset_consumer() and re-sync from a base snapshot"
         )
 
     t1 = time.time()
-    if isinstance(log_dir, DataFrame):
-        changes = log_dir
-        row = changes.agg(F.max("change_version")).first()
-        to_version = int(row[0] or 0)
-    else:
-        to_version = cl.current_version(spark, log_dir)
-        changes = cl.read_changelog(spark, log_dir)
-    # inclusive re-read of the cursor version (ties may straddle a batch
-    # boundary), snapshot-bounded above
-    changes = changes.filter(
-        (F.col("change_version") >= state.last_sync_version)
-        & (F.col("change_version") <= to_version)
+    # inclusive re-read of the cursor version: ties may straddle a batch
+    # boundary
+    changes = _snapshot(spark, log_dir, since).observe(
+        WATERMARK_METRIC, F.max("change_version")
     )
-    changed = _changed_invoices(changes, lines, model)
-    latest = _latest_with_op(changed)
+    latest = _latest_with_op(_changed_invoices(changes, lines, model))
     # keyset filter on the COLLAPSED stream: strictly after the cursor
     resumable = cdc.keyset_filter(
-        latest,
-        state.last_sync_version,
-        state.last_processed_id,
-        version_col="change_version",
-        key_col="invoice_id",
+        latest, since, since_id, version_col="change_version", key_col="invoice_id"
     )
     batch = cdc.bounded_ordered_batch(
         resumable, limit, "change_version", "invoice_id"
@@ -338,38 +369,44 @@ def pull_batch(
     # limits AFTER joining InvoiceHeader, sqls/storedprocedure.sql:35,55-56,
     # so its deleted keys never enter the batch; advancing past them here
     # is the equivalent no-starvation guarantee.)
-    batch = batch.cache()
-    try:
-        batch_rows = batch.select("invoice_id", "change_version").orderBy(
-            "change_version", "invoice_id"
-        ).collect()
-        stage_ms["query"] = (time.time() - t1) * 1000
+    docs = _assemble(header, lines, batch, model)
+    # the one action: the sink's per-task counts and the batch's one-row
+    # cursor aggregate, each filling its own columns of a union (a cross
+    # join of them costs more jobs); the watermark is observed on the
+    # snapshot's scans, so it needs no scan or job of its own
+    result = _per_record_sink(docs, out_dir, error_dir, _write_json).unionByName(
+        batch.selectExpr(
+            "count(1) AS batch_count",
+            "max(struct(change_version, invoice_id)) AS last",
+        ),
+        allowMissingColumns=True,
+    )
+    rows = result.collect()
+    stage_ms["pull"] = (time.time() - t1) * 1000
+    written = sum(row.n for row in rows if row.n is not None)
+    batch_count, last = next(
+        (row.batch_count, row.last) for row in rows if row.batch_count is not None
+    )
+    # read from this execution without blocking (an Observation's get
+    # waits for as long as no scan has reported)
+    observed = result._jdf.queryExecution().observedMetrics().get(WATERMARK_METRIC)
+    to_version = observed.get().get(0) if observed.isDefined() else None
+    to_version = since if to_version is None else to_version
+    if batch_count == 0:
+        return BatchResult(
+            consumer, since, to_version, 0, False, since, since_id, stage_ms
+        )
 
-        batch_count = len(batch_rows)
-        if batch_count == 0:
-            return BatchResult(
-                consumer, state.last_sync_version, to_version, 0, False,
-                state.last_sync_version, state.last_processed_id, stage_ms,
-            )
-
-        docs = _assemble(header, lines, batch, model)
-        t2 = time.time()
-        written = write_documents(docs, out_dir, error_dir)
-        stage_ms["sink"] = (time.time() - t2) * 1000
-
-        # advance to the LAST row of the version-ordered pre-join batch
-        # (server.js:235-249) — only reached when the sink succeeded
-        t3 = time.time()
-        last = batch_rows[-1]
-        registry.advance(consumer, last.change_version, last.invoice_id)
-        stage_ms["update_state"] = (time.time() - t3) * 1000
-    finally:
-        batch.unpersist()
+    # advance to the LAST row of the version-ordered pre-join batch
+    # (server.js:235-249) — only reached when the action succeeded
+    t2 = time.time()
+    registry.advance(consumer, last.change_version, last.invoice_id)
+    stage_ms["update_state"] = (time.time() - t2) * 1000
 
     total_s = time.time() - t0
     return BatchResult(
         consumer=consumer,
-        from_version=state.last_sync_version,
+        from_version=since,
         to_version=to_version,
         processed=written,
         has_more=batch_count == limit,
@@ -739,11 +776,4 @@ def write_documents_bson(
     write_documents (a record whose JSON parse or BSON encode fails is a
     poison record too); the encode runs inside the Arrow batch loop, so
     it is partition-parallel and never touches the driver."""
-    from sql_cdc_spark.functions import bsoncodec
-
-    def _write_one(fname: str, js) -> None:
-        fname = fname.removesuffix(".json") + ".bson"
-        data = bsoncodec.encode_document(json.loads(js))
-        _atomic_write(os.path.join(out_dir, fname), data, mode="wb")
-
-    return _per_record_sink(docs, out_dir, error_dir, _write_one)
+    return _delivered(_per_record_sink(docs, out_dir, error_dir, _write_bson))

@@ -2,12 +2,15 @@
 (core tier): the sink dying part-way, the cursor advance failing after a
 complete sink, and the registry's state-file rename failing. Each failure
 must leave the cursor's state file intact, no stray ``.tmp`` file and no
-cached batch behind, and the retry must deliver exactly what a clean run
+persisted RDD behind, and the retry must deliver exactly what a clean run
 does — a replayable source plus an idempotent sink.
 
 Failures are injected by patching attributes in the driver process; the
 per-document writes run in Python workers, out of reach of such a patch,
-so the sink is wrapped at ``pipeline.write_documents``."""
+so the sink is wrapped at ``pipeline._per_record_sink``, the lazy sink
+whose counts the pull's one action collects: the wrapper writes two of
+the batch's documents and then raises in the driver, before that action
+runs."""
 
 import json
 import os
@@ -73,13 +76,13 @@ def _raise(*args, **kwargs):
 
 
 def _sink_dies_after_two_files(monkeypatch):
-    write_documents = pl.write_documents
+    sink = pl._per_record_sink
 
-    def _dies(docs, out_dir, error_dir=None):
-        write_documents(docs.orderBy("doc_filename").limit(2), out_dir, error_dir)
+    def _dies(docs, out_dir, error_dir, write_one):
+        sink(docs.orderBy("doc_filename").limit(2), out_dir, error_dir, write_one).collect()
         _raise()
 
-    monkeypatch.setattr(pl, "write_documents", _dies)
+    monkeypatch.setattr(pl, "_per_record_sink", _dies)
 
 
 @pytest.mark.parametrize(

@@ -305,31 +305,54 @@ def test_document_assembly_roundtrip(spark, base):
         assert nums == sorted(nums)
 
 
-def test_partitioned_changelog_prunes_and_reads(spark, base, tmp_path):
-    """Version-bucketed log layout: a bounded range read prunes to the
-    matching bucket directories and returns exactly the range rows."""
+def test_partitioned_changelog_prunes_and_reads(spark, base, tmp_path, monkeypatch):
+    """Version-bucketed log layout: a pull's read from its cursor version
+    prunes to the buckets that can hold such rows (a version_bucket
+    PartitionFilter in the pull's own plan) and returns exactly the rows
+    from the cursor version on, without the partition column."""
     header, lines = base
     log = str(tmp_path / "plog")
+    # 1000 events at versions 1..49951: five buckets of VERSION_BUCKET_SIZE
     ev = tables.load(spark, SF_DIR_SMALL, "events").select(
         F.lit(cl.HEADER_TABLE).alias("table_name"),
         F.col("user_id").alias("key_id"),
-        F.col("event_id").alias("change_version"),
+        (F.col("event_id") * 50 + 1).alias("change_version"),
         F.lit("U").alias("op"),
         F.col("ts"),
     )
-    cl.write_changelog_partitioned(ev, log, bucket_size=100)
-    got = cl.read_changelog_range(spark, log, 250, 720, bucket_size=100)
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [" in plan
-    assert "version_bucket" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    cl.write_changelog_partitioned(ev, log)
+    buckets = [d for d in os.listdir(log) if d.startswith("version_bucket=")]
+    assert len(buckets) == 5
+    since = 2 * cl.VERSION_BUCKET_SIZE + 1
+
+    got = cl.read_changelog(spark, log, since)
+    assert "version_bucket" not in got.columns
     versions = [r.change_version for r in got.collect()]
-    assert versions and min(versions) == 251 and max(versions) == 720
-    # generic reader sees the whole log without the partition column
-    full = cl.read_changelog(spark, log)
-    assert "version_bucket" not in full.columns
-    assert full.count() == ev.count()
+    assert sorted(versions) == list(range(since, 49952, 50))
+    assert cl.read_changelog(spark, log).count() == ev.count()
+
+    plans = []
+    sink = pl._per_record_sink
+
+    def _capture(docs, *args):
+        plans.append(
+            docs._sc._jvm.PythonSQLUtils.explainString(
+                docs._jdf.queryExecution(), "formatted"
+            )
+        )
+        return sink(docs, *args)
+
+    monkeypatch.setattr(pl, "_per_record_sink", _capture)
+    reg = SyncStateRegistry(str(tmp_path / "state"))
+    reg.advance("c", since, 0)
+    res = pl.pull_batch(
+        spark, log, "c", reg, header, lines, MODEL, str(tmp_path / "docs")
+    )
+    assert res.to_version == 49951 and res.last_version == 49951
+    pruned = [
+        f.split("]", 1)[0] for f in plans[0].split("PartitionFilters: [")[1:]
+    ]
+    assert any("version_bucket" in f for f in pruned), pruned
 
 
 def test_drain_no_loss_no_dup_under_random_limits(spark, base, tmp_path):
